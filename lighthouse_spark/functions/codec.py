@@ -144,24 +144,44 @@ def encode_positions(positions_per_doc: list[np.ndarray]) -> bytes:
     return varint_encode(np.concatenate(parts))
 
 
+def position_slots(flat: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """Walk a concatenated [n, p0, gap...] stream of ``n`` postings:
+    returns (slots, plens), the index of each posting's count slot and
+    its position count. The walk is sequential (each count locates the
+    next) but costs one Python step per posting, not per position.
+    Raises ValueError when the ``n`` counts do not span the stream
+    exactly."""
+    fl = flat.tolist()
+    slots = np.empty(n, dtype=np.int64)
+    plens = np.empty(n, dtype=np.int64)
+    i = 0
+    try:
+        for k in range(n):
+            slots[k] = i
+            cnt = fl[i]
+            plens[k] = cnt
+            i += cnt + 1
+    except IndexError:
+        raise ValueError(
+            f"positions stream length mismatch: {n} postings overrun {len(fl)} values"
+        ) from None
+    if i != len(fl):
+        raise ValueError(
+            f"positions stream length mismatch: walked {i}, have {len(fl)}"
+        )
+    return slots, plens
+
+
 def decode_positions(buf: bytes, n_docs: int) -> list[np.ndarray]:
     """Inverse of encode_positions. Vectorized: one segmented cumsum
     over all docs' gap values, split into per-doc views — the only
-    per-doc Python work is the sequential [n, ...] boundary scan
-    (inherent: each count locates the next). Returned arrays are views
-    into one buffer; callers copy (asarray/astype) before mutating."""
+    per-doc Python work is the count-slot walk (position_slots).
+    Returned arrays are views into one buffer; callers copy
+    (asarray/astype) before mutating."""
     flat = varint_decode(buf).astype(np.int64)
     if n_docs == 0:
         return []
-    fl = flat.tolist()
-    starts = np.empty(n_docs, dtype=np.int64)
-    lens = np.empty(n_docs, dtype=np.int64)
-    i = 0
-    for k in range(n_docs):
-        starts[k] = i
-        n = fl[i]
-        lens[k] = n
-        i += n + 1
+    starts, lens = position_slots(flat, n_docs)
     mask = np.ones(flat.size, dtype=bool)
     mask[starts] = False
     g = np.cumsum(flat[mask])

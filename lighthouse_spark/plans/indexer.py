@@ -12,7 +12,7 @@ as four DataFrames:
 
 Design notes for 100 TB scale:
 
-- Tokenization is a single Arrow-batched pandas UDF that aggregates
+- Tokenization is a single mapInArrow stage that aggregates
   per-doc (term, tf[, positions]) INSIDE the batch — postings explode
   from one array entry per distinct term JVM-side; no token-level
   shuffle exists anywhere in the build.
@@ -126,27 +126,37 @@ def build_index(
     source-code corpus it is xxhash64(repo, path, commit) assigned in
     corpus.py, stable across runs and parallelism levels (SURVEY.md
     §7.4 determinism requirement).
+
+    ``cache_agg`` persists the per-doc aggregates (one tokenize pass
+    total: postings AND doc_stats both derive from them) and keeps them
+    as ``_intermediates``, which the store encodes blocks from.
     """
     specs = {k: (v if isinstance(v, FieldSpec) else FieldSpec(v)) for k, v in fields.items()}
-    any_positions = any(s.positions for s in specs.values())
-    id_type = docs.schema[doc_id_col].dataType.simpleString()
+    aggs = _field_aggregates(docs, doc_id_col, specs, mode)
+    if cache_agg:
+        aggs = [a.persist() for a in aggs]
+    return _index_over_aggregates(docs, doc_id_col, specs, mode, aggs, keep=cache_agg)
 
-    parts: list[DataFrame] = []
-    ds_parts: list[DataFrame] = []
-    intermediates: list[DataFrame] = []
-    # Shuffle-free per-doc aggregates: tf/dl (and occurrence positions
-    # for positional fields) are grouped INSIDE the tokenize task, so
-    # no token-level explode+groupBy(+collect_list) shuffle exists —
-    # at 10^12 docs that shuffle moves one row per OCCURRENCE, the
-    # largest shuffle in a build. r8: the aggregate is a mapInArrow
-    # stage with zero per-token Python and no pandas object-list round
-    # trip (functions/analysis.doc_terms_arrow, guide §4.2) — the old
-    # pandas UDFs looped Python over every token occurrence.
+
+def _field_aggregates(
+    docs: DataFrame, doc_id_col: str, specs: dict[str, FieldSpec], mode: str
+) -> list[DataFrame]:
+    """One per-doc aggregate frame per field, in ``specs`` order:
+    (doc_id, field, dl, terms, tfs[, poss]), one row per doc.
+
+    Shuffle-free: tf/dl (and occurrence positions for positional
+    fields) are grouped INSIDE the tokenize task, so no token-level
+    explode+groupBy(+collect_list) shuffle exists — at 10^12 docs that
+    shuffle moves one row per OCCURRENCE, the largest shuffle in a
+    build. The aggregate is a mapInArrow stage with zero per-token
+    Python (functions/analysis.doc_terms_arrow, guide §4.2)."""
+    id_type = docs.schema[doc_id_col].dataType.simpleString()
+    aggs = []
     for name, spec in specs.items():
         tok_schema = f"doc_id {id_type}, dl long, terms array<string>, tfs array<int>"
         if spec.positions:
             tok_schema += ", poss array<array<int>>"
-        agg = (
+        aggs.append(
             docs.select(
                 F.col(doc_id_col).alias("doc_id"), F.col(spec.column).alias("_src")
             )
@@ -156,11 +166,24 @@ def build_index(
                 *(["poss"] if spec.positions else []),
             )
         )
-        if cache_agg:
-            # one tokenize pass total: postings AND doc_stats both
-            # derive from this persisted per-doc aggregate
-            agg = agg.persist()
-            intermediates.append(agg)
+    return aggs
+
+
+def _index_over_aggregates(
+    docs: DataFrame,
+    doc_id_col: str,
+    specs: dict[str, FieldSpec],
+    mode: str,
+    aggs: list[DataFrame],
+    keep: bool,
+) -> InvertedIndex:
+    """The logical index as lazy views over per-field aggregates
+    (``_field_aggregates`` order). ``keep`` records them as the index's
+    ``_intermediates`` — the input the store's block encoder needs."""
+    any_positions = any(s.positions for s in specs.values())
+    parts: list[DataFrame] = []
+    ds_parts: list[DataFrame] = []
+    for agg, spec in zip(aggs, specs.values()):
         if spec.positions:
             p = (
                 agg.select(
@@ -210,5 +233,5 @@ def build_index(
         fields=specs,
         doc_id_col=doc_id_col,
         mode=mode,
-        _intermediates=intermediates,
+        _intermediates=list(aggs) if keep else [],
     )

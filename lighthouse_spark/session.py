@@ -13,6 +13,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 24g. In local mode the driver
+    JVM runs every task, and a heap sized near physical RAM lets it
+    grow until the kernel OOM-kills it instead of collecting."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "24g"
+    return f"{min(24 * 1024, max(1024, total // 2 // 2**20))}m"
+
+
 def get_spark(
     app_name: str = "lighthouse_spark",
     cpus: int | None = None,
@@ -24,6 +35,8 @@ def get_spark(
     ``cpus`` defaults to $SPARK_GRAFT_CPUS or all cores. Shuffle
     partitions default to the core count — at cluster scale this would
     be ~2-3x total executor cores instead; AQE coalesces either way.
+    The driver heap is $SPARK_DRIVER_MEM, else half of physical RAM
+    capped at 24g.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
@@ -39,7 +52,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -36,8 +36,9 @@ Layout rationale at 10^12-doc scale:
 - **Term-frequency skew**: a stopword's postings within one shard are
   bounded by shard size — sharding IS the salting of the global
   posting list (term, bucket=doc_id%N). Additionally the encode step
-  groups by (shard, field) — one pandas group per shard-field, never
-  one group per term — so no single hot term creates a straggler task.
+  partitions by (shard, field) — one encode group per shard-field,
+  never one group per term — so no single hot term creates a
+  straggler task.
 - **Blocks of 128 docs** with per-block max tf-normalization: the
   block-max metadata WAND uses to skip. doc_ids delta-gap+varint;
   tf/dl varint.
@@ -80,137 +81,13 @@ _BLOCK_COLS = [
 ]
 
 
-def _encode_group(pdf: pd.DataFrame, block_size: int, avgdl_map: dict[str, float]) -> pd.DataFrame:
-    """Encode one (shard, field) group: rows (term, doc_id, tf, dl
-    [,positions]) -> block rows.
-
-    Fully vectorized: every block's gaps/tfs/dls are varint-encoded in
-    ONE numpy pass over the whole group, then sliced per block by byte
-    offsets — no per-term or per-block Python encode calls (they were
-    the build-throughput bottleneck: ~0.3 ms/block × 100k blocks).
-    Position payloads (only for phrase-enabled fields) still encode
-    per block."""
-    if len(pdf) == 0:
-        return pd.DataFrame({c: [] for c in _BLOCK_COLS}, columns=_BLOCK_COLS)
-    shard = int(pdf["shard"].iloc[0])
-    field = pdf["field"].iloc[0]
-    avgdl = float(avgdl_map.get(field, 1.0))
-    pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-
-    n = len(pdf)
-    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    tfs = pdf["tf"].to_numpy(dtype=np.int64)
-    dls = pdf["dl"].to_numpy(dtype=np.int64)
-    terms = pdf["term"].to_numpy()
-
-    new_term = np.ones(n, dtype=bool)
-    new_term[1:] = terms[1:] != terms[:-1]
-    term_start = np.maximum.accumulate(np.where(new_term, np.arange(n), 0))
-    rank = np.arange(n) - term_start
-    block_start = new_term | (rank % block_size == 0)
-    starts = np.flatnonzero(block_start)
-    ends = np.append(starts[1:], n)
-
-    # doc-id gaps: absolute (zigzag) at block starts, plain diffs inside
-    diffs = np.zeros(n, dtype=np.uint64)
-    if n > 1:
-        diffs[1:] = (ids[1:] - ids[:-1]).astype(np.uint64)
-    gaps = np.where(block_start, codec.zigzag_encode(ids), diffs)
-
-    id_buf, id_len = codec.varint_encode_with_lengths(gaps)
-    tf_buf, tf_len = codec.varint_encode_with_lengths(tfs.astype(np.uint64))
-    dl_buf, dl_len = codec.varint_encode_with_lengths(dls.astype(np.uint64))
-
-    def offsets(lens: np.ndarray) -> np.ndarray:
-        off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=off[1:])
-        return off
-
-    id_off, tf_off, dl_off = offsets(id_len), offsets(tf_len), offsets(dl_len)
-    id_mv, tf_mv, dl_mv = memoryview(id_buf), memoryview(tf_buf), memoryview(dl_buf)
-
-    tfn = tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-    max_tfn = np.maximum.reduceat(tfn, starts)
-
-    has_pos = "positions" in pdf.columns and pdf["positions"].notna().any()
-    pos_enc: list[bytes | None]
-    if has_pos and pdf["positions"].notna().all():
-        # Fully vectorized position payloads (97% of encode CPU as a
-        # per-doc loop): all docs' [n, p0, gap...] streams concatenate
-        # into ONE uint64 array, varint-encoded in one pass, then each
-        # block's payload is a byte-offset slice — byte-identical to
-        # per-block codec.encode_positions (pinned by test_codec).
-        arrs = [np.asarray(a, dtype=np.int64) for a in pdf["positions"]]
-        plens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=n)
-        total = int(plens.sum())
-        flat = np.concatenate(arrs) if total else np.zeros(0, dtype=np.int64)
-        # output slot layout: per doc, one count slot + plens[i] values
-        doc_out_start = np.zeros(n, dtype=np.int64)
-        np.cumsum(plens[:-1] + 1, out=doc_out_start[1:])
-        stream = np.empty(total + n, dtype=np.uint64)
-        stream[doc_out_start] = plens.astype(np.uint64)
-        if total:
-            d = np.empty(total, dtype=np.int64)
-            d[0] = flat[0]
-            d[1:] = flat[1:] - flat[:-1]
-            doc_flat_start = np.zeros(n, dtype=np.int64)
-            np.cumsum(plens[:-1], out=doc_flat_start[1:])
-            fs = doc_flat_start[plens > 0]
-            d[fs] = flat[fs]  # absolute first position per doc
-            val_mask = np.ones(total + n, dtype=bool)
-            val_mask[doc_out_start] = False
-            stream[val_mask] = d.astype(np.uint64)
-        p_buf, p_len = codec.varint_encode_with_lengths(stream)
-        doc_bytes = np.add.reduceat(p_len, doc_out_start)
-        doc_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(doc_bytes, out=doc_off[1:])
-        p_mv = memoryview(p_buf)
-        pos_enc = [
-            bytes(p_mv[doc_off[s] : doc_off[e]]) for s, e in zip(starts, ends)
-        ]
-    elif has_pos:
-        # mixed None/non-None docs (not produced by any current build
-        # path): legacy per-block encode
-        poss = pdf["positions"].tolist()
-        pos_enc = []
-        for s, e in zip(starts, ends):
-            if poss[s] is None:
-                pos_enc.append(None)
-            else:
-                pos_enc.append(
-                    codec.encode_positions(
-                        [np.asarray(p if p is not None else [], dtype=np.int64)
-                         for p in poss[s:e]]
-                    )
-                )
-    else:
-        pos_enc = [None] * len(starts)
-
-    return pd.DataFrame(
-        {
-            "shard": np.full(len(starts), shard, dtype=np.int32),
-            "field": field,
-            "term": terms[starts],
-            "block_id": (rank[starts] // block_size).astype(np.int32),
-            "n_docs": (ends - starts).astype(np.int32),
-            "doc_ids_enc": [bytes(id_mv[id_off[s] : id_off[e]]) for s, e in zip(starts, ends)],
-            "tfs_enc": [bytes(tf_mv[tf_off[s] : tf_off[e]]) for s, e in zip(starts, ends)],
-            "dls_enc": [bytes(dl_mv[dl_off[s] : dl_off[e]]) for s, e in zip(starts, ends)],
-            "positions_enc": pos_enc,
-            "max_tfn": max_tfn,
-            "max_doc_id": ids[ends - 1],
-            "enc_avgdl": np.full(len(starts), avgdl),
-        },
-        columns=_BLOCK_COLS,
-    )
-
-
 def _positions_stream(flat: np.ndarray, plens: np.ndarray):
     """Concatenated per-doc [n, p0(abs), gap...] uint64 stream + per-doc
-    byte counts after varint encoding — the SAME layout `_encode_group`
-    builds (byte-identical; pinned by test_codec/store roundtrips).
-    `flat` is every position of every posting concatenated in posting
-    order; `plens` the per-posting position counts."""
+    byte counts after varint encoding — the layout of
+    codec.encode_positions, so each block's payload is a byte window
+    of one buffer (byte-identical; pinned by test_codec). `flat` is
+    every position of every posting concatenated in posting order;
+    `plens` the per-posting position counts."""
     n = plens.size
     total = int(plens.sum())
     doc_out_start = np.zeros(n, dtype=np.int64)
@@ -233,6 +110,22 @@ def _positions_stream(flat: np.ndarray, plens: np.ndarray):
     return p_buf, doc_bytes
 
 
+def _binary_offsets(lens: np.ndarray, bounds: np.ndarray) -> np.ndarray:
+    """int32 Arrow ``binary`` offsets of the windows between ``bounds``
+    (posting indices) over one buffer whose per-posting byte lengths
+    are ``lens``. A buffer past 2^31-1 bytes would wrap the int32
+    offsets and silently corrupt every later block, so it raises
+    instead (shrink the group: more shards)."""
+    off = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=off[1:])
+    if off[-1] > np.iinfo(np.int32).max:
+        raise ValueError(
+            f"encoded group buffer of {int(off[-1])} bytes overflows int32 "
+            "binary offsets; raise n_shards"
+        )
+    return off[bounds].astype(np.int32)
+
+
 def _encode_core(
     shard: int,
     field: str,
@@ -247,10 +140,10 @@ def _encode_core(
     plens: np.ndarray | None = None,
 ):
     """Vectorized block encode of one (shard, field) group from flat
-    per-posting arrays in ARBITRARY order: sorts by (term, doc_id) —
-    the same lexicographic string order the pandas encode used — then
-    varint-encodes every block's gaps/tfs/dls/positions in single
-    passes and emits per-block binaries as zero-copy offset windows.
+    per-posting arrays in ARBITRARY order: sorts by (term, doc_id),
+    terms in lexicographic string order, then varint-encodes every
+    block's gaps/tfs/dls/positions in single passes and emits
+    per-block binaries as zero-copy offset windows.
 
     `codes`/`uniq` are a dictionary encoding of the per-posting term
     (any code order); `flat_pos`/`plens` are the concatenated ABSOLUTE
@@ -263,7 +156,7 @@ def _encode_core(
     n = ids.size
     if n == 0:
         return None
-    # lexicographic term order == the old pandas string sort
+    # lexicographic term-string order, whatever the code order
     rank = np.empty(len(uniq), dtype=np.int64)
     rank[np.argsort(np.asarray(uniq, dtype=object))] = np.arange(len(uniq))
     rcodes = rank[codes]
@@ -292,12 +185,9 @@ def _encode_core(
     bounds = np.append(starts, n)
 
     def bin_col(buf, lens):
-        off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=off[1:])
-        boff = off[bounds].astype(np.int32)
         return pa.Array.from_buffers(
             pa.binary(), nb,
-            [None, pa.py_buffer(boff), pa.py_buffer(buf)],
+            [None, pa.py_buffer(_binary_offsets(lens, bounds)), pa.py_buffer(buf)],
         )
 
     tfn = tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
@@ -320,13 +210,7 @@ def _encode_core(
             flat_sorted = flat_pos[gather]
         else:
             flat_sorted = np.zeros(0, dtype=np.int64)
-        p_buf, doc_bytes = _positions_stream(flat_sorted, plens_s)
-        p_off = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(doc_bytes, out=p_off[1:])
-        pboff = p_off[bounds].astype(np.int32)
-        pos_col = pa.Array.from_buffers(
-            pa.binary(), nb, [None, pa.py_buffer(pboff), pa.py_buffer(p_buf)]
-        )
+        pos_col = bin_col(*_positions_stream(flat_sorted, plens_s))
     else:
         pos_col = pa.nulls(nb, pa.binary())
 
@@ -354,18 +238,19 @@ def _block_encoder_arrow(block_size: int, avgdl_map: dict[str, float]):
     terms, tfs, poss, shard), partitioned by (shard, field), -> encoded
     POSTING_SCHEMA block rows.
 
-    This replaces explode → 1-row-per-posting shuffle → Arrow→pandas
-    applyInPandas (whose `positions` column materialized one Python
-    list per posting — the encode stage's dominant cost). Here the
-    shuffle moves ONE row per doc (dl once per doc, not per posting),
-    the explode happens in numpy inside the task, and the per-block
-    binary slices are zero-copy offset windows over the single varint
-    buffer (see _encode_core). Memory per task is one shard-field
-    group's postings — bounded by the shard-count scale knob, same
-    contract as the old per-group pandas encode. Output rows are
-    emitted sorted by (field, term, block_id) within each shard, so
-    the writer needs no extra repartition/sort: term-sorted row groups
-    keep the IN-list scan pruning identical to the old layout."""
+    The shuffle moves ONE row per doc (dl once per doc, not per
+    posting), the explode happens in numpy inside the task, and the
+    per-block binary slices are zero-copy offset windows over the
+    single varint buffer (see _encode_core). Memory per task: the
+    task holds EVERY (shard, field) group hashed to its partition at
+    once (n_shards x n_fields groups hash over the shuffle partitions,
+    so one task can get several, even when partitions outnumber
+    groups), then encodes them one group at a time. More shards shrink
+    each group; they do not cap how many groups share a task. Output
+    rows are emitted sorted by (field, term, block_id) within each
+    shard, so the writer needs no extra repartition/sort: term-sorted
+    row groups keep the IN-list scan pruning identical to the old
+    layout."""
     import pyarrow as pa
 
     def enc(batches):
@@ -439,6 +324,17 @@ def _agg_blocks_arrow(
     shuffle carried dl and doc_id once per POSTING plus per-row
     overhead, then a second exchange repartitioned the encoded
     blocks)."""
+    u = _agg_union(aggs).withColumn(
+        "shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
+    )
+    return u.repartition("shard", "field").mapInArrow(
+        _block_encoder_arrow(block_size, dict(avgdl_map)), POSTING_SCHEMA
+    )
+
+
+def _agg_union(aggs: list[DataFrame]) -> DataFrame:
+    """Per-field per-doc aggregate frames as ONE (doc_id, field, dl,
+    terms, tfs, poss) frame; poss is null for non-positional fields."""
     frames = []
     for a in aggs:
         cols = [F.col(c) for c in ("doc_id", "field", "dl", "terms", "tfs")]
@@ -451,12 +347,7 @@ def _agg_blocks_arrow(
     u = frames[0]
     for f in frames[1:]:
         u = u.unionByName(f)
-    u = u.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
-    )
-    return u.repartition("shard", "field").mapInArrow(
-        _block_encoder_arrow(block_size, dict(avgdl_map)), POSTING_SCHEMA
-    )
+    return u
 
 
 def _merge_blocks_arrow(block_size: int, avgdl_map: dict[str, float], tomb_bc):
@@ -464,9 +355,7 @@ def _merge_blocks_arrow(block_size: int, avgdl_map: dict[str, float], tomb_bc):
     (POSTING_SCHEMA + snapshot), partitioned by (shard, field), ->
     clean re-encoded block rows for the live corpus.
 
-    Replaces the per-block pandas merge (decode_positions built one
-    Python list of arrays per posting, then _encode_group re-walked
-    them): here each column of a whole (shard, field) group decodes in
+    Each column of a whole (shard, field) group decodes in
     ONE vectorized varint pass over the concatenated block buffers
     (doc ids via a segmented cumsum with per-block zigzag absolutes),
     dead docs mask per source snapshot in numpy, and the re-encode is
@@ -474,10 +363,13 @@ def _merge_blocks_arrow(block_size: int, avgdl_map: dict[str, float], tomb_bc):
     block's bytes provably match a from-scratch build of the live
     corpus (pinned by the sync suite's compact≡rebuild checks). The
     only per-posting Python work left is the position count-slot walk
-    (inherent: each count locates the next), which touches one int per
-    POSTING, not per position. Rows leave sorted by (field, term,
-    block_id) per shard, so compact's old repartition+sort second
-    exchange is gone (guide §2.4), matching the build writer."""
+    (codec.position_slots), which touches one int per POSTING, not per
+    position. Rows leave sorted by (field, term, block_id) per shard,
+    so compaction needs no second exchange, matching the build writer.
+    Memory per task follows _block_encoder_arrow's contract: every
+    (shard, field) group hashed to the partition, combined at once —
+    here as encoded base+delta blocks plus one group's decoded arrays
+    at a time."""
     import pyarrow as pa
 
     def merge(batches):
@@ -534,19 +426,7 @@ def _merge_blocks_arrow(block_size: int, avgdl_map: dict[str, float], tomb_bc):
             g_pos = tbl["positions_enc"].take(take).combine_chunks()
             if g_pos.null_count == 0:
                 flat = codec.varint_decode(concat_bin(g_pos)).astype(np.int64)
-                fl = flat.tolist()
-                plens = np.empty(n, dtype=np.int64)
-                slots = np.empty(n, dtype=np.int64)
-                i = 0
-                for w in range(n):
-                    slots[w] = i
-                    cnt = fl[i]
-                    plens[w] = cnt
-                    i += cnt + 1
-                if i != len(fl):
-                    raise ValueError(
-                        f"positions stream length mismatch: walked {i}, have {len(fl)}"
-                    )
+                slots, plens = codec.position_slots(flat, n)
                 vmask = np.ones(flat.size, dtype=bool)
                 vmask[slots] = False
                 d = flat[vmask]  # per-posting [p0_abs, gap...] segments
@@ -1140,6 +1020,9 @@ def save_index(
 ) -> CompressedIndex:
     """Build + persist the compressed layout from a logical index.
 
+    The index must carry its per-doc aggregates
+    (``build_index(..., cache_agg=True)``, as ``build_and_save`` does):
+    blocks, doc_stats and the term dictionary all derive from them.
     One shuffle to (shard, field) groups for encoding; one range
     shuffle for the term dictionary. Lineage + metrics recorded in
     manifest.json; the manifest is written LAST so a crashed build
@@ -1154,69 +1037,81 @@ def save_index(
     without a sorted layout). Recorded in the manifest; incremental
     bucket rewrites preserve the sort.
     """
-    spark = index.spark
+    manifest = _write_snapshot(
+        index, path, n_shards, block_size, term_partitions, n_buckets,
+        docs_sort_col,
+    )
+    _commit(path, manifest)
+    return CompressedIndex(path=path, spark=index.spark, manifest=manifest)
+
+
+def _write_snapshot(
+    index: InvertedIndex,
+    path: str,
+    n_shards: int,
+    block_size: int,
+    term_partitions: int | None,
+    n_buckets: int,
+    docs_sort_col: str | None = None,
+    op: str = "full_build",
+) -> dict:
+    """Write every table of a fresh snapshot (docs, doc_stats,
+    term_stats, postings) from ``index``'s per-doc aggregates and
+    return its manifest, NOT committed — the caller commits.
+    Unpersists the aggregates when done."""
+    if not index._intermediates:
+        raise ValueError(
+            "save_index encodes blocks from the per-doc aggregates, and this "
+            "index has none: build it with build_index(..., cache_agg=True) "
+            "or use build_and_save"
+        )
     t0 = time.time()
     snap = uuid.uuid4().hex[:12]
     os.makedirs(path, exist_ok=True)
     dirs = {k: f"{k}_v_{snap}" for k in ("docs", "doc_stats", "term_stats", "postings")}
 
-    # ONE tokenize pass, materialized UP FRONT: the per-doc aggregate
-    # (cache_agg) or the flat postings are persisted and counted once,
-    # so the independent writers below can run CONCURRENTLY without
-    # racing to compute the tokenizer lineage. (The naive lineage would
-    # re-run the tokenizer UDF once per downstream action — 5x the CPU.)
+    # ONE tokenize pass, materialized UP FRONT: the per-doc aggregates
+    # are counted once, so the independent writers below can run
+    # CONCURRENTLY without racing to compute the tokenizer lineage.
+    # (The naive lineage would re-run the tokenizer once per downstream
+    # action — 5x the CPU.)
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
 
-    flat = index.postings
+    # corpus stats (n_docs, avgdl per field) ride the per-doc
+    # aggregates' OWN materialization as Observations, so the encode is
+    # gated only by this first job (serial job latency is what caps
+    # N->4N scaling efficiency). Each intermediate is one field's
+    # aggregate; their materializations are independent, so they run
+    # from driver threads and the fields' tokenize jobs overlap (a
+    # 4-field claims build paid 4 serial job tails).
+    def _materialize(a):
+        o = Observation()
+        a.observe(
+            o,
+            F.first("field").alias("fld"),
+            F.count(F.when(F.col("dl") > 0, F.lit(1))).alias("n"),
+            F.sum("dl").alias("dl"),
+        ).count()
+        return o.get
+
     corpus: dict[str, tuple[int, float]] = {}
     total_dls: dict[str, int] = {}
-    if index._intermediates:
-        # corpus stats (n_docs, avgdl per field) ride the per-doc
-        # aggregates' OWN materialization as Observations — the encode
-        # is gated only by this first job, not by the doc_stats write
-        # (one fewer serial stage on the build's critical path; serial
-        # job latency is what caps N->4N scaling efficiency). Each
-        # intermediate is one field's (doc_id, field, _s) aggregate.
-        # r8: the per-field materializations are independent — run them
-        # from driver threads so the fields' tokenize jobs overlap
-        # (guide §2.6; a 4-field claims build paid 4 serial job tails)
-        def _materialize(a):
-            o = Observation()
-            a.observe(
-                o,
-                F.first("field").alias("fld"),
-                F.count(F.when(F.col("dl") > 0, F.lit(1))).alias("n"),
-                F.sum("dl").alias("dl"),
-            ).count()
-            return o.get
-
-        with ThreadPoolExecutor(max_workers=max(2, len(index._intermediates))) as mex:
-            for v in mex.map(_materialize, index._intermediates):
-                n = int(v["n"] or 0)
-                dl = int(v["dl"] or 0)
-                if n:
-                    corpus[str(v["fld"])] = (n, dl / n)
-                    total_dls[str(v["fld"])] = dl
-    else:
-        flat = flat.persist()
-        flat.count()
-    # doc_stats lineage is one row per doc pre-explode (no shuffle);
-    # term_stats is derived later from the encoded blocks' metadata
-    # (see w_term_stats) — no second pass over the flat postings
-    doc_stats = index.doc_stats
+    with ThreadPoolExecutor(max_workers=max(2, len(index._intermediates))) as mex:
+        for v in mex.map(_materialize, index._intermediates):
+            n = int(v["n"] or 0)
+            dl = int(v["dl"] or 0)
+            if n:
+                corpus[str(v["fld"])] = (n, dl / n)
+                total_dls[str(v["fld"])] = dl
 
     # Every scalar (doc/bucket counts, corpus stats, shard metrics)
     # rides a write or the aggregate materialization as an Observation
     # — zero separate aggregation jobs. The independent writes (docs /
-    # doc_stats / term_stats) run from driver threads; the postings
-    # encode waits on the doc_stats write ONLY when no cached per-doc
-    # aggregate exists to observe (cache_agg=False).
-
-    field_names = sorted(index.fields)
+    # doc_stats / term_stats) run from driver threads, concurrently
+    # with the postings encode.
     obs_docs = Observation()
-    obs_ds = Observation()
 
     def w_docs():
         # docs hash-bucketed by pmod(doc_id, n_buckets) so incremental
@@ -1245,45 +1140,16 @@ def save_index(
         )
 
     def w_doc_stats():
-        ds_aggs = []
-        for fn in field_names:
-            cond = F.col("field") == fn
-            ds_aggs.append(F.sum(F.when(cond, F.col("dl"))).alias(f"dl_{fn}"))
-            ds_aggs.append(F.count(F.when(cond, F.lit(1))).alias(f"n_{fn}"))
-        (
-            doc_stats.observe(obs_ds, *ds_aggs)
-            .write.mode("overwrite")
-            .parquet(f"{path}/{dirs['doc_stats']}")
-        )
+        # one row per doc per field, straight off the aggregates
+        index.doc_stats.write.mode("overwrite").parquet(f"{path}/{dirs['doc_stats']}")
 
     def w_term_stats():
-        # term dictionary DERIVED from the encoded blocks' metadata:
-        # df(term) = sum of block n_docs (every posting lands in
-        # exactly one block), read from ~postings/block_size parquet
-        # rows (3 columns) instead of a second aggregation pass over
-        # the full flat postings — at 10^12 docs that second scan is
-        # a whole extra corpus-postings read. Runs AFTER the postings
-        # write. Range-partitioned + sorted by term for pruning.
-        tp = term_partitions or max(2, n_shards // 2)
-        (
-            spark.read.parquet(f"{path}/{dirs['postings']}")
-            .groupBy("field", "term")
-            .agg(F.sum("n_docs").cast("long").alias("df"))
-            .repartitionByRange(tp, "field", "term")
-            .sortWithinPartitions("field", "term")
-            .write.mode("overwrite")
-            .parquet(f"{path}/{dirs['term_stats']}")
-        )
-
-    def w_term_stats_from_agg():
-        # r8: with cached per-doc aggregates, the dictionary derives
-        # from THEM (terms are distinct per doc, so count(*) per
-        # (field, term) == df == sum of block n_docs) — identical
-        # result, but the job reads the in-memory aggregate instead of
-        # the just-written postings parquet, and therefore runs
-        # CONCURRENTLY with the encode rather than serially after it
-        # (the old chain put the dictionary on the build's critical
-        # path).
+        # the dictionary derives from the per-doc aggregates (terms are
+        # distinct per doc, so count(*) per (field, term) == df == sum
+        # of block n_docs): the job reads the aggregates, not the
+        # postings being written, so it runs CONCURRENTLY with the
+        # encode instead of after it on the build's critical path.
+        # Range-partitioned + sorted by term for pruning.
         tp = term_partitions or max(2, n_shards // 2)
         u = None
         for a in index._intermediates:
@@ -1300,49 +1166,15 @@ def save_index(
 
     obs_blocks = Observation()
     with ThreadPoolExecutor(max_workers=4) as ex:
-        f_docs = ex.submit(w_docs)
-        f_ds = ex.submit(w_doc_stats)
-        f_ts = ex.submit(w_term_stats_from_agg) if index._intermediates else None
-        if not corpus:
-            # no cached per-doc aggregate to observe: corpus stats
-            # ride the doc_stats write, which then gates the encode
-            f_ds.result()
-            vals = obs_ds.get
-            for fn in field_names:
-                n = int(vals[f"n_{fn}"] or 0)
-                dl = int(vals[f"dl_{fn}"] or 0)
-                if n:
-                    corpus[fn] = (n, dl / n)
-                    total_dls[fn] = dl
-
-        # postings blocks. Fast path (r8): encode straight from the
-        # cached per-doc aggregates in ONE doc-level shuffle +
-        # mapInArrow (_agg_blocks_arrow) — no per-posting explode
-        # shuffle, no Arrow→pandas object lists, no second exchange of
-        # the encoded blocks (rows leave the encoder already (field,
-        # term)-sorted per shard). Fallback keeps the per-posting
-        # pandas encode for indexes built without cache_agg.
-        avgdl_map = {f: v[1] for f, v in corpus.items()}
-        if index._intermediates:
-            blocks = _agg_blocks_arrow(
-                index._intermediates, n_shards, block_size, avgdl_map
-            )
-        else:
-            p = flat.withColumn(
-                "shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
-            )
-            if "positions" not in flat.columns:
-                p = p.withColumn("positions", F.lit(None).cast("array<int>"))
-
-            def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-                return _encode_group(pdf, block_size, avgdl_map)
-
-            blocks = (
-                p.groupBy("shard", "field")
-                .applyInPandas(enc, POSTING_SCHEMA)
-                .repartition("shard")
-                .sortWithinPartitions("field", "term", "block_id")
-            )
+        futs = [ex.submit(w) for w in (w_docs, w_doc_stats, w_term_stats)]
+        # postings blocks: ONE doc-level shuffle of the per-doc
+        # aggregates + mapInArrow encode (_agg_blocks_arrow); rows
+        # leave the encoder already (field, term)-sorted per shard, so
+        # the writer needs no second exchange
+        blocks = _agg_blocks_arrow(
+            index._intermediates, n_shards, block_size,
+            {f: v[1] for f, v in corpus.items()},
+        )
         b_aggs = []
         for s in range(n_shards):
             cond = F.col("shard") == s
@@ -1354,13 +1186,8 @@ def save_index(
             .partitionBy("shard")
             .parquet(f"{path}/{dirs['postings']}")
         )
-        if f_ts is None:
-            f_ts = ex.submit(w_term_stats)  # needs the postings just written
-        f_docs.result()
-        f_ds.result()
-        f_ts.result()
-    if not index._intermediates:
-        flat.unpersist()
+        for f in futs:
+            f.result()
     index.unpersist_intermediates()
 
     dvals = obs_docs.get
@@ -1376,7 +1203,7 @@ def save_index(
         if int(bvals[f"bl_{s}"] or 0)
     }
 
-    manifest = {
+    return {
         "version": 1,
         "snapshot": snap,
         "dirs": dirs,
@@ -1408,15 +1235,13 @@ def save_index(
         "lineage": [
             {
                 "snapshot": snap,
-                "op": "full_build",
+                "op": op,
                 "n_docs": n_docs_total,
                 "wall_seconds": round(time.time() - t0, 3),
                 "shards": sorted(shard_metrics),
             }
         ],
     }
-    _commit(path, manifest)
-    return CompressedIndex(path=path, spark=spark, manifest=manifest)
 
 
 def _docs_state_of(man: dict) -> dict:
@@ -1484,29 +1309,29 @@ def build_resumable(
 
     The corpus splits into ``n_slices`` deterministic slices
     (pmod(xxhash64(doc_id), n_slices)); each slice's TOKENIZED output
-    (flat postings + doc_stats, the expensive part at 10^12 files) is
-    committed to ``build_checkpoint/slice_k/`` together with an
+    — its per-field per-doc aggregates (doc_id, field, dl, terms,
+    tfs[, poss]), the expensive part at 10^12 files — is committed to
+    ``build_checkpoint/slice_k/aggs`` together with an
     atomically-updated progress journal carrying per-slice doc counts,
     per-field length sums and wall time. A restarted build skips every
     journaled slice — at a 10-hour 100 TB tokenize, a crash costs one
     slice, not the build. When all slices are present, FINALIZE reads
-    the checkpointed postings (no re-tokenize), computes exact global
-    corpus stats from the journal sums, encodes the block-compressed
-    layout with the global avgdl, and commits the ordinary manifest
-    (slice lineage preserved); the checkpoint dir is then removed.
-    Results are IDENTICAL to a one-shot build (pinned by
-    tests/test_resumable.py).
+    the checkpointed aggregates (no re-tokenize) and writes the
+    snapshot through save_index's writer (exact global corpus stats,
+    blocks encoded with the global avgdl, dictionary, doc_stats), then
+    commits the ordinary manifest with the slice lineage prepended; the
+    checkpoint dir is then removed. Results are IDENTICAL to a one-shot
+    build, block bytes included (pinned by tests/test_resumable.py).
 
     ``max_slices`` bounds the slices processed THIS invocation (the
     test hook for simulating interruption; also a natural work-budget
     knob for spot instances). Returns None while incomplete.
     """
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
 
-    from lighthouse_spark.plans.indexer import build_index
+    from lighthouse_spark.plans.indexer import _field_aggregates, _index_over_aggregates
 
     spark = docs.sparkSession
     specs = {k: (v if isinstance(v, FieldSpec) else FieldSpec(v)) for k, v in fields.items()}
@@ -1523,6 +1348,9 @@ def build_resumable(
         "mode": mode,
         "doc_id_col": doc_id_col,
         "fields": {k: [v.column, v.positions] for k, v in specs.items()},
+        # checkpoint layout: a journal from another layout is refused
+        # below rather than half-read
+        "checkpoint": "doc_aggregates",
     }
     if journal.get("params") not in (None, params):
         raise ValueError(
@@ -1537,7 +1365,8 @@ def build_resumable(
             json.dump(journal, f, indent=2)
         os.replace(tmp, jpath)
 
-    # ---- per-slice tokenize + checkpoint -------------------------------
+    # ---- per-slice tokenize + checkpoint: ONE write per slice, its
+    # per-field n/dl sums ride that write as an Observation
     done_this_run = 0
     for s in range(n_slices):
         if str(s) in journal["slices"]:
@@ -1549,40 +1378,21 @@ def build_resumable(
         sdocs = docs.filter(
             F.pmod(F.xxhash64(F.col(doc_id_col)), F.lit(n_slices)) == s
         )
-        idx = build_index(sdocs, doc_id_col, specs, mode, cache_agg=True)
-        flat = idx.postings
-        if idx._intermediates:
-            for a in idx._intermediates:
-                a.count()
-        else:
-            flat = flat.persist()
-            flat.count()
-        if "positions" not in flat.columns:
-            flat = flat.withColumn("positions", F.lit(None).cast("array<int>"))
         obs = Observation()
-        ds_aggs = []
+        sums = []
         for fn in field_names:
             cond = F.col("field") == fn
-            ds_aggs.append(F.sum(F.when(cond, F.col("dl"))).alias(f"dl_{fn}"))
-            ds_aggs.append(F.count(F.when(cond, F.lit(1))).alias(f"n_{fn}"))
-
-        def w_post():
-            flat.write.mode("overwrite").parquet(f"{ckdir}/slice_{s}/postings")
-
-        def w_ds():
-            (
-                idx.doc_stats.observe(obs, *ds_aggs)
-                .write.mode("overwrite")
-                .parquet(f"{ckdir}/slice_{s}/doc_stats")
+            sums.append(F.sum(F.when(cond, F.col("dl"))).alias(f"dl_{fn}"))
+            sums.append(
+                F.count(F.when(cond & (F.col("dl") > 0), F.lit(1))).alias(f"n_{fn}")
             )
-
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            for fut in [ex.submit(w_post), ex.submit(w_ds)]:
-                fut.result()
+        (
+            _agg_union(_field_aggregates(sdocs, doc_id_col, specs, mode))
+            .observe(obs, *sums)
+            .write.mode("overwrite")
+            .parquet(f"{ckdir}/slice_{s}/aggs")
+        )
         vals = obs.get
-        idx.unpersist_intermediates()
-        if not idx._intermediates:
-            flat.unpersist()
         journal["slices"][str(s)] = {
             "fields": {
                 fn: {"n": int(vals[f"n_{fn}"] or 0), "dl": int(vals[f"dl_{fn}"] or 0)}
@@ -1593,152 +1403,32 @@ def build_resumable(
         _write_journal()
         done_this_run += 1
 
-    # ---- finalize: encode from checkpointed postings (no re-tokenize) --
+    # ---- finalize: the snapshot from the checkpointed aggregates ------
     t0 = time.time()
-    snap = uuid.uuid4().hex[:12]
-    dirs = {k: f"{k}_v_{snap}" for k in ("docs", "doc_stats", "term_stats", "postings")}
-    corpus = {}
-    total_dls = {}
-    for fn in field_names:
-        n = sum(sl["fields"][fn]["n"] for sl in journal["slices"].values())
-        dl = sum(sl["fields"][fn]["dl"] for sl in journal["slices"].values())
-        if n:
-            corpus[fn] = (n, dl / n)
-            total_dls[fn] = dl
-    flat = spark.read.parquet(*[f"{ckdir}/slice_{s}/postings" for s in range(n_slices)])
-    ds_all = spark.read.parquet(
-        *[f"{ckdir}/slice_{s}/doc_stats" for s in range(n_slices)]
+    ck = spark.read.parquet(*[f"{ckdir}/slice_{s}/aggs" for s in range(n_slices)])
+    aggs = [
+        ck.filter(F.col("field") == fn).drop(*(() if spec.positions else ("poss",)))
+        for fn, spec in specs.items()
+    ]
+    manifest = _write_snapshot(
+        _index_over_aggregates(docs, doc_id_col, specs, mode, aggs, keep=True),
+        path, n_shards, block_size, term_partitions, n_buckets,
+        op="full_build_finalize",
     )
-
-    obs_docs = Observation()
-    obs_blocks = Observation()
-
-    def w_docs():
-        bucket_col = F.pmod(F.col(doc_id_col).cast("long"), F.lit(n_buckets)).cast("int")
-        docs_aggs = [
-            F.count(F.when(F.col("_bucket") == b, F.lit(1))).alias(f"b_{b}")
-            for b in range(n_buckets)
-        ]
-        (
-            docs.withColumn("_bucket", bucket_col)
-            .observe(obs_docs, *docs_aggs)
-            .repartition(n_buckets, F.col("_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(f"{path}/{dirs['docs']}")
-        )
-
-    def w_ds_final():
-        ds_all.write.mode("overwrite").parquet(f"{path}/{dirs['doc_stats']}")
-
-    def w_ts():
-        # derived from the encoded blocks' n_docs metadata (same as
-        # save_index.w_term_stats) — runs after w_blocks
-        tp = term_partitions or max(2, n_shards // 2)
-        (
-            spark.read.parquet(f"{path}/{dirs['postings']}")
-            .groupBy("field", "term")
-            .agg(F.sum("n_docs").cast("long").alias("df"))
-            .repartitionByRange(tp, "field", "term")
-            .sortWithinPartitions("field", "term")
-            .write.mode("overwrite")
-            .parquet(f"{path}/{dirs['term_stats']}")
-        )
-
-    def w_blocks():
-        avgdl_map = {f: v[1] for f, v in corpus.items()}
-        p = flat.withColumn(
-            "shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
-        )
-
-        def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _encode_group(pdf, block_size, avgdl_map)
-
-        blocks = p.groupBy("shard", "field").applyInPandas(enc, POSTING_SCHEMA)
-        b_aggs = []
-        for sh in range(n_shards):
-            cond = F.col("shard") == sh
-            b_aggs.append(F.count(F.when(cond, F.lit(1))).alias(f"bl_{sh}"))
-            b_aggs.append(F.sum(F.when(cond, F.col("n_docs"))).alias(f"po_{sh}"))
-        (
-            blocks.observe(obs_blocks, *b_aggs)
-            .repartition("shard")
-            .sortWithinPartitions("field", "term", "block_id")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(f"{path}/{dirs['postings']}")
-        )
-
-    with ThreadPoolExecutor(max_workers=4) as ex:
-        futs = [ex.submit(w) for w in (w_docs, w_ds_final, w_blocks)]
-        futs[-1].result()  # w_ts derives from the written postings
-        futs.append(ex.submit(w_ts))
-        for fut in futs:
-            fut.result()
-
-    dvals = obs_docs.get
-    bucket_docs = {
-        str(b): int(dvals[f"b_{b}"]) for b in range(n_buckets) if int(dvals[f"b_{b}"] or 0)
-    }
-    bvals = obs_blocks.get
-    shard_metrics = {
-        sh: {"blocks": int(bvals[f"bl_{sh}"] or 0), "postings": int(bvals[f"po_{sh}"] or 0)}
-        for sh in range(n_shards)
-        if int(bvals[f"bl_{sh}"] or 0)
-    }
-    slice_lineage = [
+    slices = sorted(journal["slices"].items(), key=lambda kv: int(kv[0]))
+    manifest["lineage"] = [
         {
-            "snapshot": snap,
+            "snapshot": manifest["snapshot"],
             "op": "build_slice",
             "slice": int(s),
-            "n_docs": max(
-                (sl["fields"][fn]["n"] for fn in field_names), default=0
-            ),
+            "n_docs": max((sl["fields"][fn]["n"] for fn in field_names), default=0),
             "wall_seconds": sl["wall_seconds"],
         }
-        for s, sl in sorted(journal["slices"].items(), key=lambda kv: int(kv[0]))
-    ]
-    manifest = {
-        "version": 1,
-        "snapshot": snap,
-        "dirs": dirs,
-        "created_unix": int(t0),
-        "analyzer_mode": mode,
-        "doc_id_col": doc_id_col,
-        "fields": {k: {"column": v.column, "positions": v.positions} for k, v in specs.items()},
-        "n_shards": n_shards,
-        "n_buckets": n_buckets,
-        "docs_buckets": {b: f"{dirs['docs']}/_bucket={b}" for b in bucket_docs},
-        "bucket_docs": bucket_docs,
-        "block_size": block_size,
-        "bm25": {"k1": K1, "b": B},
-        "corpus": {
-            f: {"n_docs": v[0], "avgdl": v[1], "total_dl": total_dls[f]}
-            for f, v in corpus.items()
-        },
-        "deltas": [],
-        "ts_deltas": [],
-        "tombstones": {},
-        "metrics": {
-            "n_docs": sum(bucket_docs.values()),
-            "build_seconds": round(
-                sum(sl["wall_seconds"] for sl in journal["slices"].values())
-                + (time.time() - t0),
-                3,
-            ),
-            "shards": shard_metrics,
-        },
-        "lineage": slice_lineage
-        + [
-            {
-                "snapshot": snap,
-                "op": "full_build_finalize",
-                "n_docs": sum(bucket_docs.values()),
-                "wall_seconds": round(time.time() - t0, 3),
-                "shards": sorted(shard_metrics),
-            }
-        ],
-    }
+        for s, sl in slices
+    ] + manifest["lineage"]
+    manifest["metrics"]["build_seconds"] = round(
+        sum(sl["wall_seconds"] for _, sl in slices) + (time.time() - t0), 3
+    )
     _commit(path, manifest)
     shutil.rmtree(ckdir, ignore_errors=True)
     return CompressedIndex(path=path, spark=spark, manifest=manifest)

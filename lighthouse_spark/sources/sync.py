@@ -47,7 +47,6 @@ import time
 import uuid
 from dataclasses import asdict, dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -247,12 +246,8 @@ def apply_incremental(
         f_old = pre.submit(old_rows_q.collect)
         if upserts is not None:
             delta_idx = build_index(upserts, id_col, fields, man["analyzer_mode"], cache_agg=True)
-            if delta_idx._intermediates:
-                for a in delta_idx._intermediates:
-                    a.count()
-            else:
-                delta_idx.postings = delta_idx.postings.persist()
-                delta_idx.postings.count()
+            for a in delta_idx._intermediates:
+                a.count()
             pos_ts = delta_idx.term_stats.select(
                 "field", "term", F.col("df").cast("long").alias("df")
             )
@@ -279,25 +274,11 @@ def apply_incremental(
             f: (v["total_dl"] / v["n_docs"] if v["n_docs"] else 1.0)
             for f, v in man["corpus"].items()
         }
-        bs = man["block_size"]
-        if delta_idx._intermediates:
-            # r8 fast path: encode from the cached per-doc aggregates
-            # (store._agg_blocks_arrow — one doc-level shuffle, no
-            # per-posting explode / pandas round trip)
-            blocks = store_mod._agg_blocks_arrow(
-                delta_idx._intermediates, man["n_shards"], bs, avgdl_now
-            )
-        else:
-            p = delta_idx.postings.withColumn(
-                "shard", F.pmod(F.xxhash64("doc_id"), F.lit(man["n_shards"])).cast("int")
-            )
-            if "positions" not in delta_idx.postings.columns:
-                p = p.withColumn("positions", F.lit(None).cast("array<int>"))
-
-            def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-                return store_mod._encode_group(pdf, bs, avgdl_now)
-
-            blocks = p.groupBy("shard", "field").applyInPandas(enc, POSTING_SCHEMA)
+        # encode from the cached per-doc aggregates: one doc-level
+        # shuffle, the same _encode_core as the full build
+        blocks = store_mod._agg_blocks_arrow(
+            delta_idx._intermediates, man["n_shards"], man["block_size"], avgdl_now
+        )
         blocks.write.mode("overwrite").parquet(f"{cindex.path}/postings_delta/{snap}")
 
     def w_doc_stats():
@@ -441,8 +422,6 @@ def apply_incremental(
             if int(vals[f"n_{fn}"] or 0)
         ]
         delta_idx.unpersist_intermediates()
-        if not delta_idx._intermediates:
-            delta_idx.postings.unpersist()
 
     if bucket_map is not None and skip_docs:
         n_docs_total = sum(bucket_docs.values())  # no live row changed

@@ -89,13 +89,49 @@ def test_corpus_generator_determinism_pins():
     assert sum(1 for t in r1.split() if t.startswith("uid")) == 30
 
 
-def test_arrow_block_encoder_matches_pandas_encoder():
-    """r8: _block_encoder_arrow (mapInArrow fast path) must produce
-    byte-identical block rows to _encode_group (the pandas path it
-    replaced) for the same logical postings — same blocks, same
-    varint payloads, same block-max metadata."""
-    import numpy as np
-    import pandas as pd
+def _reference_blocks(docs, shard_of, block_size, avgdl):
+    """Byte-parity oracle for the block encoder, one block at a time
+    over the codec primitives: postings sorted by (term, doc_id) per
+    (shard, field), cut into runs of ``block_size`` per term, each run
+    encoded with delta_encode / varint_encode / encode_positions, plus
+    the BM25 block-max tf-normalization."""
+    from lighthouse_spark.operators.scoring import B, K1
+
+    groups = {}
+    for doc_id, field, dl, terms, tfs, poss in docs:
+        for t, tf, ps in zip(terms, tfs, poss):
+            groups.setdefault((shard_of(doc_id), field), []).append((t, doc_id, tf, dl, ps))
+    want = {}
+    for (sh, fld), posts in groups.items():
+        posts.sort(key=lambda p: (p[0], p[1]))
+        by_term = {}
+        for p in posts:
+            by_term.setdefault(p[0], []).append(p)
+        for term, tp in by_term.items():
+            for bid, lo in enumerate(range(0, len(tp), block_size)):
+                blk = tp[lo : lo + block_size]
+                ids = np.array([p[1] for p in blk], dtype=np.int64)
+                tfs = np.array([p[2] for p in blk], dtype=np.int64)
+                dls = np.array([p[3] for p in blk], dtype=np.int64)
+                tfn = tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
+                want[(sh, fld, term, bid)] = (
+                    len(blk),
+                    codec.delta_encode(ids),
+                    codec.varint_encode(tfs.astype(np.uint64)),
+                    codec.varint_encode(dls.astype(np.uint64)),
+                    codec.encode_positions([np.array(p[4], dtype=np.int64) for p in blk]),
+                    round(float(tfn.max()), 12),
+                    int(ids[-1]),
+                )
+    return want
+
+
+def test_arrow_block_encoder_matches_reference_encoder():
+    """_block_encoder_arrow (the mapInArrow encoder every build, sync
+    and compaction path goes through) must produce byte-identical
+    block rows to a per-block reference encode over the codec
+    primitives — same blocks, same varint payloads, same block-max
+    metadata."""
     import pyarrow as pa
 
     from lighthouse_spark.sources import store as store_mod
@@ -120,24 +156,7 @@ def test_arrow_block_encoder_matches_pandas_encoder():
     n_shards, block_size, avgdl = 4, 8, 17.3
     shard_of = lambda d: hash(("s", d)) % n_shards  # noqa: E731 — any grouping works
 
-    # pandas path: one exploded frame per (shard, field) group
-    rows = []
-    for doc_id, field, dl, terms, tfs, poss in docs:
-        for t, tf, ps in zip(terms, tfs, poss):
-            rows.append((shard_of(doc_id), field, t, doc_id, tf, dl, ps))
-    flat = pd.DataFrame(
-        rows, columns=["shard", "field", "term", "doc_id", "tf", "dl", "positions"]
-    )
-    want = {}
-    for (sh, fld), g in flat.groupby(["shard", "field"]):
-        out = store_mod._encode_group(g.copy(), block_size, {"content": avgdl})
-        for r in out.itertuples(index=False):
-            want[(sh, fld, r.term, r.block_id)] = (
-                r.n_docs, bytes(r.doc_ids_enc), bytes(r.tfs_enc),
-                bytes(r.dls_enc),
-                None if r.positions_enc is None else bytes(r.positions_enc),
-                round(float(r.max_tfn), 12), int(r.max_doc_id),
-            )
+    want = _reference_blocks(docs, shard_of, block_size, avgdl)
 
     # arrow path: per-doc aggregate batch through the mapInArrow encoder
     b = pa.RecordBatch.from_arrays(
@@ -163,3 +182,35 @@ def test_arrow_block_encoder_matches_pandas_encoder():
                 round(float(t["max_tfn"][i]), 12), t["max_doc_id"][i],
             )
     assert got == want
+
+
+def test_binary_offsets_overflow_raises():
+    """A (shard, field) group whose encoded buffer passes 2^31-1 bytes
+    must raise, not wrap the int32 Arrow offsets. Synthetic lengths:
+    nothing large is allocated."""
+    import pytest
+
+    from lighthouse_spark.sources.store import _binary_offsets
+
+    bounds = np.array([0, 2, 3])
+    ok = _binary_offsets(np.array([5, 7, 9], dtype=np.int64), bounds)
+    assert ok.dtype == np.int32 and ok.tolist() == [0, 12, 21]
+    lens = np.array([2**30, 2**30, 1], dtype=np.int64)  # sums to 2^31 + 1
+    with pytest.raises(ValueError, match="overflows int32"):
+        _binary_offsets(lens, bounds)
+
+
+def test_position_slots_walk_and_mismatch():
+    """codec.position_slots (shared by decode_positions and the
+    compaction merge) locates every posting's count slot, and refuses
+    a stream its counts do not span exactly."""
+    import pytest
+
+    plists = [np.array([3, 9]), np.array([], dtype=np.int64), np.array([4])]
+    flat = codec.varint_decode(codec.encode_positions(plists)).astype(np.int64)
+    slots, plens = codec.position_slots(flat, 3)
+    assert slots.tolist() == [0, 3, 4] and plens.tolist() == [2, 0, 1]
+    with pytest.raises(ValueError, match="length mismatch"):
+        codec.position_slots(flat, 2)  # trailing values left over
+    with pytest.raises(ValueError, match="length mismatch"):
+        codec.position_slots(flat, 4)  # counts run past the end
