@@ -170,16 +170,15 @@ def main() -> None:
     # attempt's window collapsed within ~2 min, so small-first
     # systematically deflated efficiency). The end probe below makes
     # the collapse visible per row either way.
+    # The order holds in every round.
     big_first = bool(os.environ.get("SCALING_BIG_FIRST"))
-    if big_first:
-        big = run_level(N_SMALL * 4)
-        small = run_level(N_SMALL)
-    else:
-        small = run_level(N_SMALL)
-        big = run_level(N_SMALL * 4)
-    for _ in range(rounds - 1):
-        small = _best(small, run_level(N_SMALL))
-        big = _best(big, run_level(N_SMALL * 4))
+    order = [N_SMALL * 4, N_SMALL] if big_first else [N_SMALL, N_SMALL * 4]
+    best: dict[int, dict] = {}
+    for _ in range(rounds):
+        for n in order:
+            r = run_level(n)
+            best[n] = _best(best[n], r) if n in best else r
+    small, big = best[N_SMALL], best[N_SMALL * 4]
     probe_end = cpu_ceiling_probe()
     identical = small["results"] == big["results"]
     eff = (big["docs_per_sec"] / small["docs_per_sec"]) / 4.0

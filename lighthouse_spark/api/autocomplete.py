@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from lighthouse_spark.api.engine import ClaimsFieldMap
 from lighthouse_spark.api.request import AutoCompleteRequest
+from lighthouse_spark.functions import memo
 from lighthouse_spark.functions.analysis import tokenize_text
 from lighthouse_spark.operators import expand, scoring, search
 from lighthouse_spark.plans.indexer import InvertedIndex
@@ -183,19 +184,12 @@ def autocomplete(
     fields = fields or ClaimsFieldMap()
     req.validate()
     if prefetched is None:
-        # memoize the assembled lazy plan per (request, index epoch)
-        # (functions/memo — see SearchEngine.search): warm identical
-        # requests skip the dictionary round trip + plan re-analysis;
-        # re-collect re-executes. The prefetched-path caller
-        # (autocomplete_over_store) memoizes at its own level, where
-        # the store epoch is in the key.
-        from lighthouse_spark.functions import memo
-
-        key = ("ac_plan", memo.epoch_of(index), tuple(vars(fields).items()),
-               req.cache_key(), round_score)
-        return memo.cache_of(index).get_or_build(
-            key,
-            lambda: _autocomplete_build(index, req, fields, round_score, None),
+        # the prefetched-path caller (autocomplete_over_store) memoizes
+        # the plan at its own level, on the store
+        return memo.get(
+            index, "ac_plan", tuple(vars(fields).items()), req.cache_key(),
+            round_score,
+            build=lambda: _autocomplete_build(index, req, fields, round_score, None),
         )
     return _autocomplete_build(index, req, fields, round_score, prefetched)
 
@@ -313,20 +307,13 @@ def autocomplete_over_store(
     terms' blocks decode via flat_view_terms and the UNCHANGED
     autocomplete() runs over the view; parity with the flat index is
     pinned by tests. Cost is O(heads + 50·fields postings), never
-    corpus-shaped.
-
-    The assembled plan is memoized on the CompressedIndex per epoch
-    (functions/memo) — identical warm requests skip the expansion
-    round trip and re-analysis; an incremental commit invalidates."""
+    corpus-shaped."""
     fmap = fields or ClaimsFieldMap()
     req.validate()
-    from lighthouse_spark.functions import memo
-
-    key = ("ac_over_store", cindex._epoch_key(), tuple(vars(fmap).items()),
-           req.cache_key(), round_score)
-    return memo.cache_of(cindex).get_or_build(
-        key,
-        lambda: _autocomplete_over_store_build(cindex, req, fmap, round_score),
+    return memo.get(
+        cindex, "ac_over_store", tuple(vars(fmap).items()), req.cache_key(),
+        round_score,
+        build=lambda: _autocomplete_over_store_build(cindex, req, fmap, round_score),
     )
 
 

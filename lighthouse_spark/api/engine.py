@@ -48,6 +48,7 @@ from lighthouse_spark.api.request import (
     extract_quoted_phrases,
     truncate_query,
 )
+from lighthouse_spark.functions import memo
 from lighthouse_spark.functions.analysis import tokenize_text
 from lighthouse_spark.operators import expand, fused, scoring, search
 from lighthouse_spark.operators import trigram as trigram_ops
@@ -522,24 +523,19 @@ class SearchEngine:
 
     # ---- entry point -------------------------------------------------------
 
+    def _epoch_key(self):
+        return memo.epoch_of(self.index)
+
     def search(self, req: SearchRequest, round_score: int | None = None) -> DataFrame:
-        """Entry point. The lazy plan is memoized per (request, index
-        epoch) — functions/memo: a repeated identical request reuses
-        the analyzed DataFrame (the prepared-statement shape; measured
-        r8: ~1.0 s of driver-side construction/analysis + ~0.7 s of
-        dictionary round trips per composite request at local scale,
-        vs ~0.2 s of execution). Re-collect re-executes the jobs, so
-        nothing result-shaped is ever cached. Skipped when the opt-in
-        contains-clauses are on (their trigram handles resolve live
-        per request against a mutable store)."""
+        """Entry point; the lazy plan is memoized per request. Not
+        memoized when the opt-in contains-clauses are on (their trigram
+        handles resolve live per request against a mutable store)."""
         req.validate()
         if self.enable_contains:
             return self._search_build(req, round_score)
-        from lighthouse_spark.functions import memo
-
-        key = ("search_plan", memo.epoch_of(self.index), req.cache_key(), round_score)
-        return memo.cache_of(self).get_or_build(
-            key, lambda: self._search_build(req, round_score)
+        return memo.get(
+            self, "search_plan", req.cache_key(), round_score,
+            build=lambda: self._search_build(req, round_score),
         )
 
     def _search_build(self, req: SearchRequest, round_score: int | None = None) -> DataFrame:
@@ -689,32 +685,22 @@ def search_over_store(
     docs side stays the store's bucketed table (filters and the
     response projection push into its scan).
 
-    The assembled lazy plan is memoized on the CompressedIndex per
-    epoch (functions/memo) — an incremental commit bumps the epoch and
-    invalidates, so a warm identical request skips the dictionary
-    round trips and plan re-analysis but never serves stale state."""
+    The assembled lazy plan is memoized per request, but only without
+    ``engine_kwargs`` (they may carry unhashable trigram handles, as
+    SearchEngine.search skips the memo under enable_contains)."""
     fmap = fields or ClaimsFieldMap()
     req.validate()
-    from lighthouse_spark.functions import memo as _memo
 
-    try:
-        key = (
-            "search_over_store", cindex._epoch_key(), req.cache_key(),
-            tuple(vars(fmap).items()), now_seconds, round_score,
-            tuple(sorted(engine_kwargs.items())),
+    def build():
+        return _search_over_store_build(
+            cindex, req, fmap, now_seconds, round_score, engine_kwargs
         )
-        hash(key)
-    except TypeError:
-        key = None  # unhashable kwargs (e.g. trigram handles) — build fresh
-    if key is not None:
-        return _memo.cache_of(cindex).get_or_build(
-            key,
-            lambda: _search_over_store_build(
-                cindex, req, fmap, now_seconds, round_score, engine_kwargs
-            ),
-        )
-    return _search_over_store_build(
-        cindex, req, fmap, now_seconds, round_score, engine_kwargs
+
+    if engine_kwargs:
+        return build()
+    return memo.get(
+        cindex, "search_over_store", req.cache_key(), tuple(vars(fmap).items()),
+        now_seconds, round_score, build=build,
     )
 
 

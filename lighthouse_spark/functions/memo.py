@@ -1,30 +1,42 @@
-"""Per-index memoization for serving-path driver state.
+"""Per-index memoization of serving-path driver state.
 
-Two kinds of per-request driver cost dominate warm serving latency at
-local scale (measured r8: ~0.7 s dictionary round trip + ~1.0 s
+Three kinds of per-request driver cost dominate warm serving latency
+at local scale (measured r8: ~0.7 s dictionary round trip + ~1.0 s
 DataFrame construction/analysis per composite request, vs ~0.2 s of
 actual execution):
 
 - tiny dictionary lookups (df / fuzzy / prefix expansions) that
-  re-collect identical rows for every identical request, and
+  re-collect identical rows for every identical request,
 - the lazy query *plan* itself, rebuilt and re-analyzed from scratch
-  on every call even when the request is identical.
+  on every call even when the request is identical, and
+- a store's table handles (building a reader re-lists parquet files
+  on the driver).
 
-Both are safely memoizable per index EPOCH: a CompressedIndex exposes
-`_epoch_key()` (bumped by every incremental commit — the same key its
-own df_map/postings handles are memoized under), and a flat
-InvertedIndex is immutable lineage, so object identity is its epoch.
+All of them go through one entry point, ``get(owner, kind, *key,
+build=...)``, under one rule: **a cache belongs to its owner's current
+epoch.** The epoch is ``owner._epoch_key()`` when the owner has one
+(a CompressedIndex: snapshot, lineage length, delta lists and
+versioned dirs, so every commit moves it; a SearchEngine: its index's
+epoch) and a constant otherwise (a flat InvertedIndex or a DataFrame
+is immutable lineage, so the owner object itself is the epoch). When
+the epoch changes, the old epoch's cache is dropped whole, so keys
+never carry an epoch and nothing built against an old state is ever
+served. The cache is captured BEFORE ``build`` runs: a build that
+races a commit lands in the already-discarded cache.
+
+Key parts must be hashable and must not be ``id()``s (CPython reuses
+an id once its object is collected); a DataFrame hashes by identity
+and the entry holds it, so a frame may itself be a key part.
+
 Caching a *plan* (a lazy DataFrame) never caches results: every
-collect re-executes the job from the parquet/cached inputs — this is
-the prepared-statement analogue of Lucene's reused Weight/Scorer
-trees, and exactly the "per-epoch dictionary/plan caches" steady-state
-serving shape the bench's best-of-n methodology measures.
+collect re-executes the job from the parquet/cached inputs — the
+prepared-statement analogue of Lucene's reused Weight/Scorer trees.
 
-Thread-safety: a lock guards the map; builds run outside the lock
-(they may launch Spark jobs), so two racing threads may both build —
-benign for pure plans/lookups (last write wins). Single-flight
-de-duplication for expensive computations stays where it was, in
-api/service.py's TTL cache.
+Thread-safety: a lock guards each map; builds run outside the lock
+(they may launch Spark jobs and nest further lookups), so two racing
+threads may both build — benign for pure plans/lookups (last write
+wins). Single-flight de-duplication for expensive computations stays
+in api/service.py's TTL cache.
 """
 
 from __future__ import annotations
@@ -34,6 +46,7 @@ from collections import OrderedDict
 from typing import Any, Callable
 
 _CAP = 128
+_swap = threading.Lock()
 
 
 class LRU:
@@ -58,22 +71,23 @@ class LRU:
         return v
 
 
-def cache_of(obj: Any) -> LRU:
-    """The per-object memo (attached lazily; setdefault is atomic in
-    CPython, so two racing threads share the one stored LRU)."""
-    c = obj.__dict__.get("_lh_memo")
-    if c is not None:
-        return c
-    return obj.__dict__.setdefault("_lh_memo", LRU())
-
-
-def epoch_of(index: Any) -> Any:
-    """Mutation epoch of an index handle: CompressedIndex exposes
-    `_epoch_key()` (versioned dirs + deltas + tombstones); a flat
-    InvertedIndex is immutable lineage, so None (object identity via
-    cache_of's per-object map) suffices."""
-    ek = getattr(index, "_epoch_key", None)
+def epoch_of(owner: Any) -> Any:
+    """``owner._epoch_key()`` when it has one, else None (constant)."""
+    ek = getattr(owner, "_epoch_key", None)
     return ek() if callable(ek) else None
+
+
+def get(owner: Any, kind: str, *key: Any, build: Callable[[], Any]) -> Any:
+    """``build()``'s value for ``(kind, *key)``, memoized in ``owner``'s
+    current-epoch cache."""
+    epoch = epoch_of(owner)
+    cur = owner.__dict__.get("_lh_memo")
+    if cur is None or cur[0] != epoch:
+        with _swap:
+            cur = owner.__dict__.get("_lh_memo")
+            if cur is None or cur[0] != epoch:
+                cur = owner.__dict__["_lh_memo"] = (epoch, LRU())
+    return cur[1].get_or_build((kind, *key), build)
 
 
 def copy2(d: dict) -> dict:

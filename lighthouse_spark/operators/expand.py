@@ -103,11 +103,7 @@ def expand_prefix_with_df_fields(
     is bounded by fields×(limit+heads) rows, never the vocabulary's
     prefix-range size.
 
-    Returns {field: (expansions sorted/capped, {term: df})}.
-
-    Memoized per index epoch (functions/memo): identical warm requests
-    skip the driver round trip entirely — the store's df_map handle
-    cache extended to the expansion scan."""
+    Returns {field: (expansions sorted/capped, {term: df})}."""
     if not prefix or not fields:
         return {f: ([], {}) for f in fields}
 
@@ -121,11 +117,10 @@ def expand_prefix_with_df_fields(
             out[f] = (exps, dfm)
         return out
 
-    key = (
-        "prefix_df", memo.epoch_of(index), tuple(fields), prefix,
-        tuple(head_terms), limit,
+    got = memo.get(
+        index, "prefix_df", tuple(fields), prefix, tuple(head_terms), limit,
+        build=build,
     )
-    got = memo.cache_of(index).get_or_build(key, build)
     return {f: (list(e), dict(d)) for f, (e, d) in got.items()}
 
 
@@ -545,10 +540,9 @@ def fuzzy_and_df(
                 out_df[f].setdefault(t, 0)  # absent — recorded so nothing refetches
         return out_df, out_fz
 
-    # memoized per index epoch (functions/memo): a warm identical
-    # request's ONLY dictionary round trip becomes a dict lookup
-    key = ("fuzzy_and_df", memo.epoch_of(index), tuple(fields), tuple(uniq), limit)
-    got_df, got_fz = memo.cache_of(index).get_or_build(key, build)
+    got_df, got_fz = memo.get(
+        index, "fuzzy_and_df", tuple(fields), tuple(uniq), limit, build=build
+    )
     # consumers mutate the df map (engine._df_for_specs merges extras)
     return memo.copy2(got_df), memo.copy2(got_fz)
 

@@ -185,10 +185,10 @@ def prefetch_df(
             out[r["field"]][r["term"]] = int(r["df"])
         return out
 
-    # memoized per index epoch (functions/memo) — warm identical
-    # lookups skip the driver round trip; callers may mutate, so copy
-    key = ("prefetch_df", memo.epoch_of(index), tuple(fields), tuple(uniq))
-    return memo.copy2(memo.cache_of(index).get_or_build(key, build))
+    # callers may mutate, so copy
+    return memo.copy2(
+        memo.get(index, "prefetch_df", tuple(fields), tuple(uniq), build=build)
+    )
 
 
 def _shift_by(i: int):
@@ -293,14 +293,9 @@ def phrase(
     # df per query term (tiny driver-side lookup unless prefetched;
     # also lets us bail out early when any phrase term is absent).
     if df_map is None:
-        # memoized per epoch (functions/memo) + the whole lazy plan
-        # cached: a warm identical phrase query costs ZERO driver
-        # round trips and no re-analysis — re-collect re-executes.
-        key = ("phrase_plan", memo.epoch_of(index), field, tuple(terms),
-               boost, slop, slop_mode)
-        return memo.cache_of(index).get_or_build(
-            key,
-            lambda: phrase(
+        return memo.get(
+            index, "phrase_plan", field, tuple(terms), boost, slop, slop_mode,
+            build=lambda: phrase(
                 index, field, terms, boost, slop,
                 prefetch_df(index, [field], uniq)[field], slop_mode,
             ),

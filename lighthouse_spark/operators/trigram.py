@@ -42,6 +42,8 @@ import re
 
 from pyspark.sql import DataFrame, functions as F
 
+from lighthouse_spark.functions import memo
+
 try:  # Python 3.11+: sre_parse moved under re._parser
     from re import _parser as _sre
 except ImportError:  # pragma: no cover
@@ -285,16 +287,12 @@ def substring_search(
         cands, bound = got
         return _verified(docs, id_col, cands, verify, fetch_ids_max, bound)
 
-    # memoize the assembled plan on the stats frame (functions/memo):
-    # a warm identical query skips the gram-df collect + re-analysis
-    # and is exactly the verify job. Keyed on the docs/postings object
-    # identities — a rebuilt or store-refreshed index is new objects,
-    # so nothing stale is ever served; re-collect re-executes.
-    from lighthouse_spark.functions import memo
-
-    key = ("substr_plan", id(docs), id(index[0]), id_col, text_col,
-           needle, k_rarest, lowercase, fetch_ids_max)
-    return memo.cache_of(index[1]).get_or_build(key, build)
+    # keyed on the docs and postings frames themselves: a rebuilt or
+    # store-refreshed index is new objects, so nothing stale is served
+    return memo.get(
+        index[1], "substr_plan", docs, index[0], id_col, text_col,
+        needle, k_rarest, lowercase, fetch_ids_max, build=build,
+    )
 
 
 def required_literals(

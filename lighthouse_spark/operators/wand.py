@@ -47,7 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lighthouse_spark.functions import codec
+from lighthouse_spark.functions import codec, memo
 from lighthouse_spark.operators.scoring import B, K1, idf_py
 from lighthouse_spark.sources.store import CompressedIndex
 
@@ -210,17 +210,11 @@ def wand_topk(
     boost: float = 1.0,
 ) -> DataFrame:
     """BM25 top-k via block-max WAND; exact-equivalent to the
-    exhaustive DataFrame scorer (tests pin equivalence).
-
-    The lazy plan is memoized per index epoch (functions/memo): df_map
-    was already epoch-cached, this extends the same treatment to the
-    plan itself, so a warm query is exactly ONE job with zero driver
-    round trips. Re-collect re-executes the kernel."""
-    from lighthouse_spark.functions import memo
-
-    key = ("wand_plan", cindex._epoch_key(), field, tuple(terms), k, boost)
-    return memo.cache_of(cindex).get_or_build(
-        key, lambda: _wand_topk_build(cindex, field, terms, k, boost)
+    exhaustive DataFrame scorer (tests pin equivalence). A warm query
+    is exactly ONE job with zero driver round trips."""
+    return memo.get(
+        cindex, "wand_plan", field, tuple(terms), k, boost,
+        build=lambda: _wand_topk_build(cindex, field, terms, k, boost),
     )
 
 

@@ -53,6 +53,7 @@ Layout rationale at 10^12-doc scale:
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import time
@@ -64,7 +65,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lighthouse_spark.functions import codec
+from lighthouse_spark.functions import codec, memo
 from lighthouse_spark.operators.scoring import B, K1
 from lighthouse_spark.plans.indexer import FieldSpec, InvertedIndex
 
@@ -481,20 +482,6 @@ class CompressedIndex:
     spark: SparkSession
     manifest: dict
 
-    def _memo(self, kind: str, build):
-        """Memoize a DataFrame handle per index epoch: building a
-        reader re-lists parquet files on the driver (file-index RPCs),
-        which would otherwise tax every query. Versioned dirs make the
-        memo safe — a state change always points at NEW paths."""
-        key = self._epoch_key()
-        cache = getattr(self, "_df_handles", None)
-        if cache is None or cache[0] != key:
-            cache = (key, {})
-            self._df_handles = cache
-        if kind not in cache[1]:
-            cache[1][kind] = build()
-        return cache[1][kind]
-
     @property
     def postings(self) -> DataFrame:
         """Base blocks unioned with any incremental delta blocks, each
@@ -517,7 +504,7 @@ class CompressedIndex:
                 base = base.unionByName(d)
             return base
 
-        return self._memo("postings", build)
+        return memo.get(self, "postings", build=build)
 
     def dir_of(self, kind: str) -> str:
         """Current versioned dir of a mutable table. Every rewrite gets
@@ -540,7 +527,7 @@ class CompressedIndex:
                 return self.spark.read.parquet(*paths)
             return self.spark.read.parquet(self.dir_of("docs"))
 
-        return self._memo("docs", build)
+        return memo.get(self, "docs", build=build)
 
     def bucket_of(self, doc_id: int) -> int:
         """Docs-table bucket of a doc id — Python mirror of the Spark
@@ -573,7 +560,7 @@ class CompressedIndex:
                 .filter(F.col("df") > 0)
             )
 
-        return self._memo("term_stats", build)
+        return memo.get(self, "term_stats", build=build)
 
     def save_term_dict(self, pfx_len: int = 3) -> None:
         """Persist the FUZZY dictionary: the live term_stats view
@@ -602,7 +589,7 @@ class CompressedIndex:
             .write.partitionBy("field", "pfx")
             .parquet(f"{self.path}/{d}")
         )
-        man = self.manifest
+        man = copy.deepcopy(self.manifest)
         man.setdefault("dirs", {})["term_dict"] = d
         man["term_dict_pfx_len"] = int(pfx_len)
         man["term_dict_for"] = {
@@ -610,6 +597,7 @@ class CompressedIndex:
             "ts_deltas": list(man.get("ts_deltas", [])),
         }
         _commit(self.path, man)
+        self.manifest = man
 
     def term_dict(self) -> tuple[DataFrame, int] | None:
         """The LIVE (field, pfx)-partitioned fuzzy dictionary as
@@ -658,7 +646,7 @@ class CompressedIndex:
                 .select("field", "term", "df", "pfx")
             )
 
-        return self._memo("term_dict", build), pfx_len
+        return memo.get(self, "term_dict", build=build), pfx_len
 
     def _docs_state(self) -> dict:
         return _docs_state_of(self.manifest)
@@ -681,11 +669,16 @@ class CompressedIndex:
         id_col = self.manifest["doc_id_col"]
         postings, _ = _tri.build_trigram_index(self.docs, id_col, text_col)
         _tri.save_trigram_index(postings, f"{self.path}/{d}", id_col)
-        man = self.manifest
+        self._commit_trigram(text_col, d)
+
+    def _commit_trigram(self, text_col: str, d: str) -> None:
+        """Commit ``d`` as the fresh gram base for ``text_col``."""
+        man = copy.deepcopy(self.manifest)
         man.setdefault("dirs", {})[f"trigram_{text_col}"] = d
-        man.setdefault("trigram_for", {})[text_col] = self._docs_state()
+        man.setdefault("trigram_for", {})[text_col] = _docs_state_of(man)
         man.get("trigram_deltas", {}).pop(text_col, None)
         _commit(self.path, man)
+        self.manifest = man
 
     def fold_trigram(self, text_col: str) -> None:
         """Fold pending trigram deltas into a fresh base FROM THE LIVE
@@ -704,11 +697,7 @@ class CompressedIndex:
         _tri.save_trigram_index(
             idx[0].select("gram", id_col), f"{self.path}/{d}", id_col
         )
-        man = self.manifest
-        man.setdefault("dirs", {})[f"trigram_{text_col}"] = d
-        man.setdefault("trigram_for", {})[text_col] = self._docs_state()
-        man.get("trigram_deltas", {}).pop(text_col, None)
-        _commit(self.path, man)
+        self._commit_trigram(text_col, d)
 
     def trigram_index(self, text_col: str):
         """Live ``(postings, stats)`` for ``text_col``, or None when
@@ -792,7 +781,7 @@ class CompressedIndex:
                 stats = self.spark.read.parquet(f"{self.path}/{d}/stats")
             return post, stats
 
-        return self._memo(f"trigram_{text_col}", build)
+        return memo.get(self, f"trigram_{text_col}", build=build)
 
     @property
     def doc_stats(self) -> DataFrame:
@@ -803,7 +792,7 @@ class CompressedIndex:
                 base = base.unionByName(d)
             return base
 
-        return self._memo("doc_stats", build)
+        return memo.get(self, "doc_stats", build=build)
 
     def flat_view_terms(
         self, terms: list[str], fields: list[str] | None = None
@@ -961,12 +950,14 @@ class CompressedIndex:
         return out
 
     def _epoch_key(self) -> tuple:
-        """Changes whenever the index state advances — the invalidation
-        key for driver-side caches. Lineage length covers merge ops;
-        the versioned-dirs map covers auxiliary saves that do NOT
-        append lineage (save_term_dict, save_trigram — each mints a
-        fresh uuid dir, so a re-save with different parameters can
-        never serve the previous save's memoized frame)."""
+        """Changes whenever the index state advances — the epoch of
+        this handle's memo (functions/memo). Lineage length covers
+        merge ops (every commit that changes tombstones, corpus counts
+        or deltas appends lineage); the versioned-dirs map covers
+        auxiliary saves that do NOT append lineage (save_term_dict,
+        save_trigram — each mints a fresh uuid dir, so a re-save with
+        different parameters can never serve the previous save's
+        memoized frame)."""
         return (
             self.manifest.get("snapshot"),
             len(self.manifest.get("lineage", [])),
@@ -980,20 +971,12 @@ class CompressedIndex:
         without pending deltas, via the live term_stats view (base df +
         per-snapshot signed df deltas maintained at merge time). Never
         decodes posting blocks on the driver: the scan is an IN-list
-        over the dictionary only.
-
-        Results are memoized per index epoch (including absent terms,
-        stored as 0), so a WARM query pays zero dictionary jobs — its
-        only Spark job is the scoring kernel itself."""
+        over the dictionary only. Absent terms are memoized as 0, so a
+        WARM query pays zero dictionary jobs."""
         uniq = sorted(set(terms))
         if not uniq:
             return {}
-        key = self._epoch_key()
-        cached = getattr(self, "_df_cache", None)
-        if cached is None or cached[0] != key:
-            cached = (key, {})
-            self._df_cache = cached
-        fcache = cached[1].setdefault(field, {})
+        fcache = memo.get(self, "df_map", field, build=dict)
         missing = [t for t in uniq if t not in fcache]
         if missing:
             rows = (

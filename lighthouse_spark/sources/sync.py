@@ -41,6 +41,7 @@ store.save_index, not this path.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import time
@@ -173,7 +174,7 @@ def apply_incremental(
       1 touched-bucket docs write   (+Observation: per-bucket counts)
     """
     spark = cindex.spark
-    man = dict(cindex.manifest)
+    man = copy.deepcopy(cindex.manifest)
     t0 = time.time()
     snap = uuid.uuid4().hex[:12]
     id_col = man["doc_id_col"]
@@ -313,8 +314,7 @@ def apply_incremental(
     obs_b = Observation()
     obs_n = Observation()
     if bucket_map is not None:
-        bucket_map = dict(bucket_map)
-        bucket_docs = dict(man.get("bucket_docs", {}))
+        bucket_docs = man.get("bucket_docs", {})
         nb = int(man["n_buckets"])
         touched = sorted({i % nb for i in aff_ids})
         doc_cols = cindex.docs.columns
@@ -519,7 +519,7 @@ def compact(cindex: CompressedIndex) -> CompressedIndex:
     Corpus scalars come from the manifest's exact bookkeeping. Lineage
     is preserved; delta dirs and superseded versions are dropped."""
     spark = cindex.spark
-    man = dict(cindex.manifest)
+    man = copy.deepcopy(cindex.manifest)
     t0 = time.time()
     snap = uuid.uuid4().hex[:12]
     tomb_bc = cindex.tombstones_bc()
@@ -964,7 +964,7 @@ def apply_counts(cindex: CompressedIndex, counts: DataFrame) -> CompressedIndex:
     (patch_counts), never a forced corpus-size broadcast."""
     docs = cindex.docs
     id_col = cindex.manifest["doc_id_col"]
-    man = dict(cindex.manifest)
+    man = copy.deepcopy(cindex.manifest)
     snap = uuid.uuid4().hex[:12]
     new_dir = f"docs_v_{snap}"
     bucket_map = man.get("docs_buckets")
@@ -973,7 +973,6 @@ def apply_counts(cindex: CompressedIndex, counts: DataFrame) -> CompressedIndex:
         return patch_counts(src, counts, docs.columns, id_col)
 
     if bucket_map is not None:
-        bucket_map = dict(bucket_map)
         nb = int(man["n_buckets"])
         tb = (
             counts.select(

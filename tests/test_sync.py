@@ -8,13 +8,15 @@ document set. Compaction preserves results and clears deltas.
 
 from __future__ import annotations
 
+import copy
+
 import pytest
 from pyspark.sql import functions as F
 
 from lighthouse_spark.functions.analysis import tokenize_text
 from lighthouse_spark.operators import wand
 from lighthouse_spark.plans.indexer import FieldSpec
-from lighthouse_spark.sources import sync
+from lighthouse_spark.sources import store, sync
 from lighthouse_spark.sources.corpus import synthetic_corpus
 from lighthouse_spark.sources.store import build_and_save, load_index
 
@@ -153,6 +155,43 @@ def test_compaction_preserves_results(spark, base, tmp_path):
     assert ci.manifest["lineage"][-1]["op"] == "compaction"
     ops = [e["op"] for e in ci.manifest["lineage"]]
     assert ops[0] == "full_build" and "incremental" in ops
+
+
+def test_failed_commit_leaves_live_handle_unchanged(spark, base, tmp_path, monkeypatch):
+    """A commit that raises leaves the live handle on the committed
+    state, never a mix: manifest deep-equal and epoch unchanged, for a
+    batch, a compaction and a fuzzy-dictionary save. The retried commit
+    then succeeds and matches a rebuild."""
+    ci = base
+    docs = ci.docs.cache()
+    ids = [r["doc_id"] for r in docs.select("doc_id").orderBy("doc_id").limit(10).collect()]
+    upd = docs.filter(F.col("doc_id").isin(ids[:5])).withColumn(
+        "content", F.concat(F.lit("crashterm "), F.col("content"))
+    )
+    dels = spark.createDataFrame([(i,) for i in ids[5:]], "doc_id long")
+
+    def boom(path, manifest):
+        raise OSError("injected commit failure")
+
+    ops = [
+        (sync, lambda c: sync.apply_incremental(c, upserts=upd, delete_ids=dels)),
+        (sync, sync.compact),
+        (store, lambda c: c.save_term_dict() or c),
+    ]
+    for i, (mod, op) in enumerate(ops):
+        before = copy.deepcopy(ci.manifest)
+        epoch = ci._epoch_key()
+        with monkeypatch.context() as m:
+            m.setattr(mod, "_commit", boom)
+            with pytest.raises(OSError, match="injected"):
+                op(ci)
+        assert ci.manifest == before, i
+        assert ci._epoch_key() == epoch, i
+        ci = op(ci)
+        assert ci._epoch_key() != epoch, i
+        rb = _rebuild(spark, ci, tmp_path, f"rbcrash{i}")
+        for q in QUERIES + ["crashterm"]:
+            assert _topk(ci, q) == _topk(rb, q), (i, q)
 
 
 def test_compacted_blocks_match_rebuild_bytes(spark, tmp_path):

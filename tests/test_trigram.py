@@ -10,6 +10,8 @@ invalidates), and the engine's accelerated contains clauses.
 
 from __future__ import annotations
 
+import copy
+import gc
 import re
 
 import pytest
@@ -18,7 +20,7 @@ from pyspark.sql import functions as F
 from lighthouse_spark.operators import trigram
 from lighthouse_spark.sources import sync
 from lighthouse_spark.sources.corpus import synthetic_corpus
-from lighthouse_spark.sources.store import build_and_save
+from lighthouse_spark.sources.store import CompressedIndex, build_and_save
 
 
 def _ids(df):
@@ -162,6 +164,22 @@ def test_persisted_layout_prunes_partitions(spark, docs, tri, needles, tmp_path)
     assert 0 < len(chosen_pfx) < n_all
 
 
+def test_substring_memo_survives_id_reuse(docs, tri):
+    """A fresh filtered docs frame per call, the previous one collected
+    first: CPython hands a collected frame's id to the next object, so
+    a plan memo keyed on id(docs) serves the previous frame's results."""
+    needle = "getusername"
+    hits = _ids(docs.filter(F.lower(F.col("content")).contains(needle)))
+    assert len(hits) >= 40
+    for i in range(40):
+        d = docs.filter(F.col("doc_id") != hits[i])
+        got = _ids(trigram.substring_search(d, "doc_id", "content", needle, tri))
+        # the unaccelerated scan of d: every hit but the one filtered out
+        assert got == hits[:i] + hits[i + 1:], i
+        del d
+        gc.collect()
+
+
 def _parity(ci, needle):
     idx = ci.trigram_index("content")
     got = _ids(trigram.substring_search(ci.docs, "doc_id", "content", needle, idx))
@@ -271,12 +289,15 @@ def test_touched_sidecar_written_and_legacy_inline_readable(spark, tmp_path):
     assert os.path.exists(f"{path}/touched_ids/{recs[0]['touched_ref']}")
     assert _parity(ci, "sidecar_marker_xyz") == [row0["doc_id"]]
 
-    # legacy form: rewrite the record to the inline list (what r4
-    # manifests contain) — same masked view, same results
-    recs[0].pop("touched_ref")
-    recs[0]["touched"] = [int(row0["doc_id"])]
-    ci._df_handles = None  # drop the cached view built from the new form
-    assert _parity(ci, "sidecar_marker_xyz") == [row0["doc_id"]]
+    # legacy form: a handle over a manifest whose record carries the
+    # inline list (what r4 manifests contain) — same masked view, same
+    # results
+    man = copy.deepcopy(ci.manifest)
+    rec = man["trigram_deltas"]["content"][0]
+    rec.pop("touched_ref")
+    rec["touched"] = [int(row0["doc_id"])]
+    legacy = CompressedIndex(path, spark, manifest=man)
+    assert _parity(legacy, "sidecar_marker_xyz") == [row0["doc_id"]]
 
 
 def test_engine_contains_uses_trigram(spark):
