@@ -101,12 +101,14 @@ class SearchEngine:
     enable_contains: bool = False
     # Scale path for enable_contains: {logical field: handle} where a
     # handle is a (postings, stats) trigram tuple OR a zero-arg
-    # callable returning one / None (operators/trigram.py). Prefer the
-    # callable form — `lambda: store.trigram_index(col)` — so the
-    # store's honest invalidation applies PER REQUEST: a raw tuple
-    # captured before an incremental docs rewrite would silently miss
-    # newly-upserted docs. Resolved handles give results identical to
-    # the unaccelerated scan; a None resolution falls back to it.
+    # callable returning one / None (operators/trigram.py). A store
+    # handle is one snapshot, so a tuple taken from it never sees a
+    # later commit. To follow commits, pass a callable that reads the
+    # reference the caller rebinds — `lambda: holder.cindex.
+    # trigram_index(col)` — so each request resolves the current
+    # snapshot and the store's honest invalidation applies to it.
+    # Resolved handles give results identical to the unaccelerated
+    # scan; a None resolution falls back to it.
     trigram: dict = dc_field(default_factory=dict)
 
     # ---- per-request prefetch state: THREAD-LOCAL -------------------------
@@ -523,13 +525,11 @@ class SearchEngine:
 
     # ---- entry point -------------------------------------------------------
 
-    def _epoch_key(self):
-        return memo.epoch_of(self.index)
-
     def search(self, req: SearchRequest, round_score: int | None = None) -> DataFrame:
         """Entry point; the lazy plan is memoized per request. Not
-        memoized when the opt-in contains-clauses are on (their trigram
-        handles resolve live per request against a mutable store)."""
+        memoized when the opt-in contains-clauses are on: their trigram
+        handles (frame tuples or callables) cannot be part of a plan
+        key, and a callable handle is meant to resolve per request."""
         req.validate()
         if self.enable_contains:
             return self._search_build(req, round_score)

@@ -58,7 +58,7 @@ class SearchRequest:
 
     def cache_key(self) -> tuple:
         """Hashable identity of everything that affects the result —
-        the per-epoch plan-cache key (functions/memo)."""
+        the per-index plan-cache key (functions/memo)."""
         return (
             self.s, self.size, self.from_, self.channel, self.channel_id,
             self.claim_id, self.claim_type, self.media_type,
@@ -106,7 +106,7 @@ class AutoCompleteRequest:
     nsfw: bool | None = None
 
     def cache_key(self) -> tuple:
-        """Hashable identity for the per-epoch plan cache."""
+        """Hashable identity for the per-index plan cache."""
         return (self.s, self.size, self.from_, self.nsfw)
 
     def validate(self) -> None:

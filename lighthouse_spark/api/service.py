@@ -179,8 +179,13 @@ class SearchService:
         keeps duplicate keys to one compute."""
         from concurrent.futures import ThreadPoolExecutor
 
-        sc = self.engine.index.docs.sparkSession.sparkContext
+        from pyspark import inheritable_thread_target
 
+        spark = self.engine.index.docs.sparkSession
+        sc = spark.sparkContext
+
+        # workers run with the caller's job group and local properties
+        @inheritable_thread_target(spark)
         def one(req: SearchRequest) -> list[dict]:
             if scheduler_pool is not None:
                 # thread-local under PYSPARK_PIN_THREAD (default on)
@@ -275,7 +280,9 @@ class StoreEngine:
     autocomplete.autocomplete_over_store). With this, the WHOLE
     serving layer — cache, metrics, /status — runs against the
     compressed on-disk index: a reference user's API process maps 1:1
-    with no flat rebuild. `SearchService(StoreEngine(cindex))`."""
+    with no flat rebuild. `SearchService(StoreEngine(cindex))`. Each
+    request reads `cindex` once, so a server swaps snapshots with one
+    attribute store: `engine.cindex = sync.sync(engine.cindex, ...)`."""
 
     cindex: object
     fields: object = None

@@ -1,4 +1,4 @@
-"""Per-index memoization of serving-path driver state.
+"""Per-owner memoization of serving-path driver state.
 
 Three kinds of per-request driver cost dominate warm serving latency
 at local scale (measured r8: ~0.7 s dictionary round trip + ~1.0 s
@@ -13,16 +13,12 @@ actual execution):
   on the driver).
 
 All of them go through one entry point, ``get(owner, kind, *key,
-build=...)``, under one rule: **a cache belongs to its owner's current
-epoch.** The epoch is ``owner._epoch_key()`` when the owner has one
-(a CompressedIndex: snapshot, lineage length, delta lists and
-versioned dirs, so every commit moves it; a SearchEngine: its index's
-epoch) and a constant otherwise (a flat InvertedIndex or a DataFrame
-is immutable lineage, so the owner object itself is the epoch). When
-the epoch changes, the old epoch's cache is dropped whole, so keys
-never carry an epoch and nothing built against an old state is ever
-served. The cache is captured BEFORE ``build`` runs: a build that
-races a commit lands in the already-discarded cache.
+build=...)``, under one rule: **a cache lives and dies with its
+owner.** Every owner is immutable state — a CompressedIndex is one
+committed snapshot (a commit returns a new handle), a flat
+InvertedIndex, a SearchEngine over one, or a DataFrame is fixed
+lineage — so nothing in an owner's cache can go stale, and keys never
+carry a version.
 
 Key parts must be hashable and must not be ``id()``s (CPython reuses
 an id once its object is collected); a DataFrame hashes by identity
@@ -46,7 +42,6 @@ from collections import OrderedDict
 from typing import Any, Callable
 
 _CAP = 128
-_swap = threading.Lock()
 
 
 class LRU:
@@ -70,24 +65,23 @@ class LRU:
                 self._d.popitem(last=False)
         return v
 
-
-def epoch_of(owner: Any) -> Any:
-    """``owner._epoch_key()`` when it has one, else None (constant)."""
-    ek = getattr(owner, "_epoch_key", None)
-    return ek() if callable(ek) else None
+    def peek(self, key: Any) -> Any:
+        with self._lock:
+            return self._d.get(key)
 
 
 def get(owner: Any, kind: str, *key: Any, build: Callable[[], Any]) -> Any:
-    """``build()``'s value for ``(kind, *key)``, memoized in ``owner``'s
-    current-epoch cache."""
-    epoch = epoch_of(owner)
-    cur = owner.__dict__.get("_lh_memo")
-    if cur is None or cur[0] != epoch:
-        with _swap:
-            cur = owner.__dict__.get("_lh_memo")
-            if cur is None or cur[0] != epoch:
-                cur = owner.__dict__["_lh_memo"] = (epoch, LRU())
-    return cur[1].get_or_build((kind, *key), build)
+    """``build()``'s value for ``(kind, *key)``, memoized on ``owner``."""
+    # probe first: setdefault alone would construct a discarded LRU
+    # per call. Writing __dict__ also works on a frozen dataclass.
+    lru = owner.__dict__.get("_lh_memo") or owner.__dict__.setdefault("_lh_memo", LRU())
+    return lru.get_or_build((kind, *key), build)
+
+
+def peek(owner: Any, kind: str, *key: Any) -> Any:
+    """What ``get`` memoized for ``(kind, *key)``, or None; builds nothing."""
+    lru = owner.__dict__.get("_lh_memo")
+    return None if lru is None else lru.peek((kind, *key))
 
 
 def copy2(d: dict) -> dict:

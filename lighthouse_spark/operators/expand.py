@@ -8,6 +8,8 @@ prefix predicate prunes partitions; SURVEY.md §4.2).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import functions as F
 
 from lighthouse_spark.functions import memo
@@ -151,10 +153,6 @@ def _auto_fuzziness(term: str) -> int:
 
 _ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789"
 _PREFIX_CLASS_CAP = 512
-# cache holds the UNCAPPED class tuple per (term, d, alphabet); the
-# max_classes cap is applied at lookup so callers with different caps
-# never see each other's truncation (ADVICE r3).
-_prefix_cache: dict[tuple[str, int, str], tuple[str, ...]] = {}
 
 
 def lev_prefix_classes(
@@ -175,9 +173,11 @@ def lev_prefix_classes(
     the DP row over the alphabet (vectorized across frontier nodes),
     then trie-collapse complete subtrees to shorter literals. Returns
     None when the class set exceeds ``max_classes`` (pruning would
-    bloat the plan more than it saves). Cached per (term, d, alphabet)
-    uncapped, ``max_classes`` applied at lookup — the classes depend
-    only on the query, never the corpus.
+    bloat the plan more than it saves). The UNCAPPED classes are
+    cached per (term, d, alphabet) (`_prefix_classes`) and
+    ``max_classes`` is applied at lookup, so callers with different
+    caps never see each other's truncation (ADVICE r3) — the classes
+    depend only on the query, never the corpus.
 
     Effectiveness by AUTO tier: d=1 (terms of length 3-5, the dominant
     fuzz class) yields ~72 of 1296 2-grams — ~94% of a term-sorted
@@ -194,12 +194,15 @@ def lev_prefix_classes(
     these classes push down as StringStartsWith filters and prune
     partitions/row-groups — the Spark analogue of Lucene's FST
     automaton intersection walking only live subtrees."""
+    out = _prefix_classes(term, d, alphabet)
+    return out if len(out) <= max_classes else None
+
+
+@functools.lru_cache(maxsize=4096)
+def _prefix_classes(term: str, d: int, alphabet: str) -> tuple[str, ...]:
+    """Uncapped `lev_prefix_classes` (thread-safe cache)."""
     import numpy as np
 
-    key = (term, d, alphabet)
-    if key in _prefix_cache:
-        cached = _prefix_cache[key]
-        return cached if len(cached) <= max_classes else None
     k = d + 1
     tl = len(term)
     rows = np.arange(tl + 1, dtype=np.int32)[None, :]
@@ -219,7 +222,6 @@ def lev_prefix_classes(
                 new_rows.append(nr[idx])
                 new_prefixes.extend(prefixes[i] + c for i in idx)
         if not new_prefixes:
-            _prefix_cache[key] = ()
             return ()
         rows = np.concatenate(new_rows, axis=0)
         prefixes = new_prefixes
@@ -234,11 +236,7 @@ def lev_prefix_classes(
             if len(kids) == n_alpha:
                 allowed -= kids
                 allowed.add(par)
-    out: tuple[str, ...] = tuple(sorted(allowed))
-    if len(_prefix_cache) > 4096:
-        _prefix_cache.clear()
-    _prefix_cache[key] = out
-    return out if len(out) <= max_classes else None
+    return tuple(sorted(allowed))
 
 
 def _fuzzy_prefix_pred(fuzzy: list[str], ds: dict[str, int]):

@@ -49,16 +49,23 @@ Layout rationale at 10^12-doc scale:
   per-shard row counts + wall time; a crashed job leaves the previous
   manifest intact (writes go to a new snapshot dir, manifest swap is
   last — see `_commit`).
+- **Snapshot handles**: a `CompressedIndex` is one committed manifest
+  (Elasticsearch's point-in-time reader). Every commit returns a NEW
+  handle; rebind it (``engine.cindex = sync.sync(engine.cindex, ...)``
+  is an atomic swap). No commit deletes a dir an older snapshot
+  reads: compaction lists them as ``retired`` and deletes them
+  ``sync._RETAIN_S`` (the 15-minute sync period) later, so a reader
+  that reloads the manifest once per period never reads a swept dir.
 """
 
 from __future__ import annotations
 
 import copy
+import dataclasses
 import json
 import os
 import time
 import uuid
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -474,9 +481,11 @@ def _merge_blocks_arrow(block_size: int, avgdl_map: dict[str, float], tomb_bc):
     return merge
 
 
-@dataclass
+@dataclasses.dataclass(frozen=True, eq=False)
 class CompressedIndex:
-    """Handle over a persisted index directory (base + deltas)."""
+    """Immutable handle over one committed snapshot of a persisted
+    index directory (base + deltas). Hashes by identity; its memo
+    (functions/memo) lives and dies with it."""
 
     path: str
     spark: SparkSession
@@ -506,12 +515,25 @@ class CompressedIndex:
 
         return memo.get(self, "postings", build=build)
 
+    def _next(self, edit) -> "CompressedIndex":
+        """Commit ``edit`` applied to a deep copy of this handle's
+        manifest; return the new handle. This one is left unchanged and
+        its tombstone broadcast leaves the executors (a running job
+        re-fetches it from the driver)."""
+        man = copy.deepcopy(self.manifest)
+        edit(man)
+        _commit(self.path, man)
+        bc = memo.peek(self, "tombstones_bc")
+        if bc is not None:
+            bc.unpersist(blocking=False)
+        return dataclasses.replace(self, manifest=man)
+
     def dir_of(self, kind: str) -> str:
-        """Current versioned dir of a mutable table. Every rewrite gets
-        a fresh `<kind>_v_<snap>` dir and a manifest pointer flip —
-        immutable-snapshot semantics (Iceberg-style): no in-place
-        overwrite can ever be served from a stale cached plan, and a
-        crashed writer never corrupts the committed version."""
+        """This snapshot's versioned dir of a table. Every rewrite gets
+        a fresh `<kind>_v_<snap>` dir and a manifest pointer flip
+        (Iceberg-style): no dir is overwritten in place, a crashed
+        writer never corrupts the committed version, and a superseded
+        dir outlives its readers (retention, module docstring)."""
         d = self.manifest.get("dirs", {}).get(kind, kind)
         return f"{self.path}/{d}"
 
@@ -562,7 +584,7 @@ class CompressedIndex:
 
         return memo.get(self, "term_stats", build=build)
 
-    def save_term_dict(self, pfx_len: int = 3) -> None:
+    def save_term_dict(self, pfx_len: int = 3) -> "CompressedIndex":
         """Persist the FUZZY dictionary: the live term_stats view
         written ``partitionBy(field, pfx)`` with pfx = the term's
         first ``pfx_len`` chars.
@@ -578,9 +600,14 @@ class CompressedIndex:
         length band. The manifest records exactly which term_stats
         state was folded in; `term_dict()` serves base+later-deltas
         live-exact and returns None (band fallback) once the base
-        dictionary itself is rewritten (compaction)."""
-        snap = uuid.uuid4().hex[:12]
-        d = f"term_dict_v_{snap}"
+        dictionary itself is rewritten (compaction). Returns the new
+        handle."""
+        d = self._write_term_dict(pfx_len)
+        return self._next(lambda man: _set_term_dict(man, d, pfx_len))
+
+    def _write_term_dict(self, pfx_len: int) -> str:
+        """Write the fuzzy dictionary dir, uncommitted; returns it."""
+        d = f"term_dict_v_{uuid.uuid4().hex[:12]}"
         (
             self.term_stats.withColumn(
                 "pfx", F.substring("term", 1, int(pfx_len))
@@ -589,15 +616,7 @@ class CompressedIndex:
             .write.partitionBy("field", "pfx")
             .parquet(f"{self.path}/{d}")
         )
-        man = copy.deepcopy(self.manifest)
-        man.setdefault("dirs", {})["term_dict"] = d
-        man["term_dict_pfx_len"] = int(pfx_len)
-        man["term_dict_for"] = {
-            "term_stats": man.get("dirs", {}).get("term_stats", "term_stats"),
-            "ts_deltas": list(man.get("ts_deltas", [])),
-        }
-        _commit(self.path, man)
-        self.manifest = man
+        return d
 
     def term_dict(self) -> tuple[DataFrame, int] | None:
         """The LIVE (field, pfx)-partitioned fuzzy dictionary as
@@ -651,7 +670,7 @@ class CompressedIndex:
     def _docs_state(self) -> dict:
         return _docs_state_of(self.manifest)
 
-    def save_trigram(self, text_col: str) -> None:
+    def save_trigram(self, text_col: str) -> "CompressedIndex":
         """Persist the character-trigram index over ``text_col`` of the
         docs table (operators/trigram.py): substring/regex queries get
         rarest-k gram candidate pruning instead of a full stored-field
@@ -661,43 +680,38 @@ class CompressedIndex:
         churn-proportional gram deltas (see trigram_index), and any
         docs rewrite that does NOT go through that path invalidates it
         honestly (a stale index would silently miss fresh docs). A
-        re-save folds all deltas into a fresh base."""
+        re-save folds all deltas into a fresh base. Returns the new
+        handle."""
         from ..operators import trigram as _tri
 
-        snap = uuid.uuid4().hex[:12]
-        d = f"trigram_{text_col}_v_{snap}"
+        d = f"trigram_{text_col}_v_{uuid.uuid4().hex[:12]}"
         id_col = self.manifest["doc_id_col"]
         postings, _ = _tri.build_trigram_index(self.docs, id_col, text_col)
         _tri.save_trigram_index(postings, f"{self.path}/{d}", id_col)
-        self._commit_trigram(text_col, d)
+        return self._next(lambda man: _set_trigram(man, text_col, d))
 
-    def _commit_trigram(self, text_col: str, d: str) -> None:
-        """Commit ``d`` as the fresh gram base for ``text_col``."""
-        man = copy.deepcopy(self.manifest)
-        man.setdefault("dirs", {})[f"trigram_{text_col}"] = d
-        man.setdefault("trigram_for", {})[text_col] = _docs_state_of(man)
-        man.get("trigram_deltas", {}).pop(text_col, None)
-        _commit(self.path, man)
-        self.manifest = man
+    def fold_trigram(self, text_col: str) -> "CompressedIndex":
+        """Fold pending trigram deltas into a fresh base; returns the new
+        handle (this one when the index is absent or invalidated)."""
+        d = self._write_trigram_fold(text_col)
+        return self if d is None else self._next(lambda man: _set_trigram(man, text_col, d))
 
-    def fold_trigram(self, text_col: str) -> None:
-        """Fold pending trigram deltas into a fresh base FROM THE LIVE
-        MASKED VIEW — a read of the existing base + churn-bounded
-        deltas, never a re-scan/re-explode of the corpus text (the
-        same no-re-tokenize contract compaction honors for postings).
-        No-op when the index is absent or invalidated."""
+    def _write_trigram_fold(self, text_col: str) -> str | None:
+        """Write a fresh gram base FROM THE LIVE MASKED VIEW — a read of
+        the existing base + churn-bounded deltas, never a re-scan/
+        re-explode of the corpus text (compaction's no-re-tokenize
+        contract). Uncommitted; returns the dir, None when invalid."""
         idx = self.trigram_index(text_col)
         if idx is None:
-            return
+            return None
         from ..operators import trigram as _tri
 
-        snap = uuid.uuid4().hex[:12]
-        d = f"trigram_{text_col}_v_{snap}"
+        d = f"trigram_{text_col}_v_{uuid.uuid4().hex[:12]}"
         id_col = self.manifest["doc_id_col"]
         _tri.save_trigram_index(
             idx[0].select("gram", id_col), f"{self.path}/{d}", id_col
         )
-        self._commit_trigram(text_col, d)
+        return d
 
     def trigram_index(self, text_col: str):
         """Live ``(postings, stats)`` for ``text_col``, or None when
@@ -906,36 +920,21 @@ class CompressedIndex:
         """snapshot -> doc ids dead IN THAT SOURCE (updated/deleted).
         Bounded by churn between compactions."""
         t = self.manifest.get("tombstones", {})
-        if isinstance(t, list):  # legacy flat form
-            t = {"base": t}
         return {k: np.array(sorted(v), dtype=np.int64) for k, v in t.items() if v}
 
     def tombstones_bc(self):
-        """Tombstone sets as a Spark BROADCAST, cached per index state.
+        """Tombstone sets as a Spark BROADCAST, one per handle.
 
         Query kernels capture the broadcast handle, not the arrays —
         at 100x churn the sets would otherwise ride in every task
         closure (a per-task driver->executor copy and a task-size
         bomb); a broadcast ships once per executor and is torrent-
-        distributed."""
-        t = self.manifest.get("tombstones", {}) or {}
-        if isinstance(t, list):
-            t = {"base": t}
-        key = json.dumps({k: sorted(int(x) for x in v) for k, v in t.items() if v},
-                         sort_keys=True)
-        cached = getattr(self, "_tomb_bc", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        val = {k: np.array(sorted(v), dtype=np.int64) for k, v in t.items() if v}
-        bc = self.spark.sparkContext.broadcast(val)
-        if cached is not None:
-            # release the superseded broadcast's executor copies —
-            # long-running sync loops would otherwise accumulate stale
-            # broadcasts until Python GC happens to run (ADVICE r2 #5).
-            # non-blocking: in-flight jobs holding the handle still work.
-            cached[1].unpersist(blocking=False)
-        self._tomb_bc = (key, bc)
-        return bc
+        distributed. The commit that supersedes this handle releases
+        the executor copies (`_next`)."""
+        return memo.get(
+            self, "tombstones_bc",
+            build=lambda: self.spark.sparkContext.broadcast(self.tombstones()),
+        )
 
     def corpus_stats(self) -> dict[str, tuple[int, float]]:
         """(n_docs, avgdl) per field — maintained EXACTLY across
@@ -948,23 +947,6 @@ class CompressedIndex:
             else:
                 out[f] = (n, float(v["avgdl"]))
         return out
-
-    def _epoch_key(self) -> tuple:
-        """Changes whenever the index state advances — the epoch of
-        this handle's memo (functions/memo). Lineage length covers
-        merge ops (every commit that changes tombstones, corpus counts
-        or deltas appends lineage); the versioned-dirs map covers
-        auxiliary saves that do NOT append lineage (save_term_dict,
-        save_trigram — each mints a fresh uuid dir, so a re-save with
-        different parameters can never serve the previous save's
-        memoized frame)."""
-        return (
-            self.manifest.get("snapshot"),
-            len(self.manifest.get("lineage", [])),
-            tuple(self.manifest.get("ts_deltas", [])),
-            tuple(sorted(self.manifest.get("dirs", {}).items())),
-            self.manifest.get("term_dict_pfx_len"),
-        )
 
     def df_map(self, field: str, terms: list[str]) -> dict[str, int]:
         """Document frequency for a small term set — exact with or
@@ -1060,7 +1042,12 @@ def _write_snapshot(
     # action — 5x the CPU.)
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
     from pyspark.sql import Observation
+
+    # every writer thread runs with the caller's job group and
+    # scheduler pool (a plain pool thread drops both)
+    inherit = inheritable_thread_target(index.spark)
 
     # corpus stats (n_docs, avgdl per field) ride the per-doc
     # aggregates' OWN materialization as Observations, so the encode is
@@ -1082,7 +1069,7 @@ def _write_snapshot(
     corpus: dict[str, tuple[int, float]] = {}
     total_dls: dict[str, int] = {}
     with ThreadPoolExecutor(max_workers=max(2, len(index._intermediates))) as mex:
-        for v in mex.map(_materialize, index._intermediates):
+        for v in mex.map(inherit(_materialize), index._intermediates):
             n = int(v["n"] or 0)
             dl = int(v["dl"] or 0)
             if n:
@@ -1149,7 +1136,7 @@ def _write_snapshot(
 
     obs_blocks = Observation()
     with ThreadPoolExecutor(max_workers=4) as ex:
-        futs = [ex.submit(w) for w in (w_docs, w_doc_stats, w_term_stats)]
+        futs = [ex.submit(inherit(w)) for w in (w_docs, w_doc_stats, w_term_stats)]
         # postings blocks: ONE doc-level shuffle of the per-doc
         # aggregates + mapInArrow encode (_agg_blocks_arrow); rows
         # leave the encoder already (field, term)-sorted per shard, so
@@ -1241,11 +1228,39 @@ def _docs_state_of(man: dict) -> dict:
     }
 
 
+def _set_term_dict(man: dict, d: str, pfx_len: int) -> None:
+    """Point ``man`` at fuzzy dictionary ``d``, recorded against the
+    term_stats state ``man`` serves."""
+    man.setdefault("dirs", {})["term_dict"] = d
+    man["term_dict_pfx_len"] = int(pfx_len)
+    man["term_dict_for"] = {
+        "term_stats": man["dirs"].get("term_stats", "term_stats"),
+        "ts_deltas": list(man.get("ts_deltas", [])),
+    }
+
+
+def _set_trigram(man: dict, text_col: str, d: str) -> None:
+    """Point ``man`` at ``d`` as the fresh gram base for ``text_col``."""
+    man.setdefault("dirs", {})[f"trigram_{text_col}"] = d
+    man.setdefault("trigram_for", {})[text_col] = _docs_state_of(man)
+    man.get("trigram_deltas", {}).pop(text_col, None)
+
+
 def _commit(path: str, manifest: dict) -> None:
+    """Durable manifest flip: fsync the temp file before the rename and
+    the directory after it, so a power loss leaves the old manifest or
+    the new one, never an empty file."""
     tmp = f"{path}/manifest.json.tmp"
     with open(tmp, "w") as f:
         json.dump(manifest, f, indent=2)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp, f"{path}/manifest.json")
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
 
 
 def load_index(spark: SparkSession, path: str) -> CompressedIndex:

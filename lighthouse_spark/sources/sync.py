@@ -41,19 +41,27 @@ store.save_index, not this path.
 
 from __future__ import annotations
 
-import copy
+import glob
 import json
 import os
+import shutil
 import time
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import asdict, dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from lighthouse_spark.plans.indexer import FieldSpec, build_index
 from lighthouse_spark.sources import store as store_mod
-from lighthouse_spark.sources.store import CompressedIndex, POSTING_SCHEMA, _commit
+from lighthouse_spark.sources.store import CompressedIndex, POSTING_SCHEMA
+
+# How long compaction keeps a dir its commit stopped referencing: the
+# reference's 15-minute sync period (cron.go:18). A reader that reloads
+# the manifest at least once per period never reads a swept dir.
+_RETAIN_S = 900
 
 
 @dataclass
@@ -140,6 +148,14 @@ def _ids_frame(ids, spark) -> DataFrame:
     return spark.createDataFrame(pd.DataFrame({"_fid": arr}), "_fid long")
 
 
+def _avgdl(man: dict) -> dict[str, float]:
+    """Exact current avgdl per field from the manifest bookkeeping."""
+    return {
+        f: (v["total_dl"] / v["n_docs"] if v["n_docs"] else 1.0)
+        for f, v in man["corpus"].items()
+    }
+
+
 def _mask_dead(fr: DataFrame, dead, spark) -> DataFrame:
     """Drop tombstoned doc_ids (list may grow with churn between
     compactions)."""
@@ -155,7 +171,8 @@ def apply_incremental(
     up_id_list: list[int] | None = None,
     del_id_list: list[int] | None = None,
 ) -> CompressedIndex:
-    """MERGE a batch into the live index (S6-S8 analogue).
+    """MERGE a batch into the index; returns the new handle (S6-S8
+    analogue).
 
     upserts: full new doc rows (same schema as docs). delete_ids: a
     one-column `doc_id` frame (or pass `del_id_list` directly when the
@@ -174,12 +191,12 @@ def apply_incremental(
       1 touched-bucket docs write   (+Observation: per-bucket counts)
     """
     spark = cindex.spark
-    man = copy.deepcopy(cindex.manifest)
+    cur = cindex.manifest
     t0 = time.time()
     snap = uuid.uuid4().hex[:12]
-    id_col = man["doc_id_col"]
+    id_col = cur["doc_id_col"]
     fields = {
-        k: FieldSpec(v["column"], v["positions"]) for k, v in man["fields"].items()
+        k: FieldSpec(v["column"], v["positions"]) for k, v in cur["fields"].items()
     }
 
     # ---- batch ids on the driver (bounded by the sync-batch contract)
@@ -209,12 +226,10 @@ def apply_incremental(
     # sources gives (per source, per field) removed n/dl AND the id
     # sets to tombstone (per-segment live-docs semantics: a re-upsert
     # kills the old version in whichever source holds it)
-    prev_tombs = man.get("tombstones", {})
-    if isinstance(prev_tombs, list):
-        prev_tombs = {"base": prev_tombs}
+    prev_tombs = cur.get("tombstones", {})
     src_frames = []
     sources = [("base", cindex.dir_of("doc_stats"))] + [
-        (s, f"{cindex.path}/doc_stats_delta/{s}") for s in man.get("deltas", [])
+        (s, f"{cindex.path}/doc_stats_delta/{s}") for s in cur.get("deltas", [])
     ]
     for sname, spath in sources:
         fr = _filter_ids(spark.read.parquet(spath), F.col("doc_id"), aff_ids, spark, keep=True, ids_df=aff_df)
@@ -237,16 +252,17 @@ def apply_incremental(
     # batch critical path). The delta index's cached per-doc aggregate
     # is materialized here so the concurrent writers below never race
     # to compute the tokenizer lineage.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # every writer thread runs with the caller's job group and
+    # scheduler pool (a plain pool thread drops both)
+    inherit = inheritable_thread_target(spark)
     delta_idx = None
     pos_ts = None
     obs_ds = Observation()
     field_names = sorted(fields)
     with ThreadPoolExecutor(max_workers=2) as pre:
-        f_old = pre.submit(old_rows_q.collect)
+        f_old = pre.submit(inherit(old_rows_q.collect))
         if upserts is not None:
-            delta_idx = build_index(upserts, id_col, fields, man["analyzer_mode"], cache_agg=True)
+            delta_idx = build_index(upserts, id_col, fields, cur["analyzer_mode"], cache_agg=True)
             for a in delta_idx._intermediates:
                 a.count()
             pos_ts = delta_idx.term_stats.select(
@@ -265,20 +281,16 @@ def apply_incremental(
     neg_ts = None
     if old_ids:
         old_docs = _filter_ids(cindex.docs, F.col(id_col), sorted(old_ids), spark, keep=True)
-        old_idx = build_index(old_docs, id_col, fields, man["analyzer_mode"])
+        old_idx = build_index(old_docs, id_col, fields, cur["analyzer_mode"])
         neg_ts = old_idx.term_stats.select(
             "field", "term", (-F.col("df")).cast("long").alias("df")
         )
 
     def w_blocks():
-        avgdl_now = {
-            f: (v["total_dl"] / v["n_docs"] if v["n_docs"] else 1.0)
-            for f, v in man["corpus"].items()
-        }
         # encode from the cached per-doc aggregates: one doc-level
         # shuffle, the same _encode_core as the full build
         blocks = store_mod._agg_blocks_arrow(
-            delta_idx._intermediates, man["n_shards"], man["block_size"], avgdl_now
+            delta_idx._intermediates, cur["n_shards"], cur["block_size"], _avgdl(cur)
         )
         blocks.write.mode("overwrite").parquet(f"{cindex.path}/postings_delta/{snap}")
 
@@ -309,67 +321,50 @@ def apply_incremental(
     # ---- docs-table MERGE: rewrite ONLY the buckets this batch
     # touches (Iceberg MERGE INTO's file-level rewrite without
     # Iceberg); untouched buckets keep their current versioned dirs.
-    bucket_map = man.get("docs_buckets")
+    bucket_map = cur["docs_buckets"]
     new_docs_dir = f"docs_v_{snap}"
     obs_b = Observation()
-    obs_n = Observation()
-    if bucket_map is not None:
-        bucket_docs = man.get("bucket_docs", {})
-        nb = int(man["n_buckets"])
-        touched = sorted({i % nb for i in aff_ids})
-        doc_cols = cindex.docs.columns
-        parts = []
-        existing = [b for b in touched if str(b) in bucket_map]
-        if existing:
-            old_b = spark.read.parquet(
-                *[f"{cindex.path}/{bucket_map[str(b)]}" for b in existing]
-            )
-            parts.append(_filter_ids(old_b.select(doc_cols), F.col(id_col), aff_ids, spark, keep=False, ids_df=aff_df))
-        if upserts is not None:
-            parts.append(upserts.select(doc_cols))
-        # delete-only batch whose touched buckets don't exist (claims
-        # created and spent within one sync window on a sparse index):
-        # no live doc row changes — skip the docs write entirely
-        # (ADVICE r2 #1: _union([]) would raise in the writer thread).
-        skip_docs = not parts
+    nb = int(cur["n_buckets"])
+    touched = sorted({i % nb for i in aff_ids})
+    doc_cols = cindex.docs.columns
+    parts = []
+    existing = [b for b in touched if str(b) in bucket_map]
+    if existing:
+        old_b = spark.read.parquet(
+            *[f"{cindex.path}/{bucket_map[str(b)]}" for b in existing]
+        )
+        parts.append(_filter_ids(old_b.select(doc_cols), F.col(id_col), aff_ids, spark, keep=False, ids_df=aff_df))
+    if upserts is not None:
+        parts.append(upserts.select(doc_cols))
+    # delete-only batch whose touched buckets don't exist (claims
+    # created and spent within one sync window on a sparse index):
+    # no live doc row changes — skip the docs write entirely
+    # (ADVICE r2 #1: _union([]) would raise in the writer thread).
+    skip_docs = not parts
 
-        def w_docs():
-            b_aggs = [
-                F.count(F.when(F.col("_bucket") == b, F.lit(1))).alias(f"b_{b}")
-                for b in touched
-            ]
-            staged = (
-                _union(parts)
-                .withColumn(
-                    "_bucket", F.pmod(F.col(id_col).cast("long"), F.lit(nb)).cast("int")
-                )
-                .observe(obs_b, *b_aggs)
-                .repartition(max(len(touched), 1), F.col("_bucket"))
+    def w_docs():
+        b_aggs = [
+            F.count(F.when(F.col("_bucket") == b, F.lit(1))).alias(f"b_{b}")
+            for b in touched
+        ]
+        staged = (
+            _union(parts)
+            .withColumn(
+                "_bucket", F.pmod(F.col(id_col).cast("long"), F.lit(nb)).cast("int")
             )
-            sort_col = man.get("docs_sort_col")
-            if sort_col and sort_col in doc_cols:
-                # preserve the secondary-lookup sort the full build
-                # declared (row-group stat pruning for point lookups)
-                staged = staged.sortWithinPartitions("_bucket", sort_col)
-            (
-                staged.write.mode("overwrite")
-                .partitionBy("_bucket")
-                .parquet(f"{cindex.path}/{new_docs_dir}")
-            )
-    else:
-        skip_docs = False
-
-        # legacy (un-bucketed) layout: full rewrite into a new dir
-        def w_docs():
-            docs = cindex.docs
-            new_docs = _filter_ids(docs, F.col(id_col), aff_ids, spark, keep=False, ids_df=aff_df)
-            if upserts is not None:
-                new_docs = new_docs.unionByName(upserts.select(docs.columns))
-            (
-                new_docs.observe(obs_n, F.count(F.lit(1)).alias("n"))
-                .write.mode("overwrite")
-                .parquet(f"{cindex.path}/{new_docs_dir}")
-            )
+            .observe(obs_b, *b_aggs)
+            .repartition(max(len(touched), 1), F.col("_bucket"))
+        )
+        sort_col = cur.get("docs_sort_col")
+        if sort_col and sort_col in doc_cols:
+            # preserve the secondary-lookup sort the full build
+            # declared (row-group stat pruning for point lookups)
+            staged = staged.sortWithinPartitions("_bucket", sort_col)
+        (
+            staged.write.mode("overwrite")
+            .partitionBy("_bucket")
+            .parquet(f"{cindex.path}/{new_docs_dir}")
+        )
 
     # ---- trigram maintenance (churn-proportional, operators/trigram):
     # for every gram index live against the PRE-batch docs state, write
@@ -378,10 +373,10 @@ def apply_incremental(
     # (shouldn't happen — upserts share the docs schema) simply stays
     # un-updated and invalidates via the state check.
     tri_cols = []
-    for key in list(man.get("dirs", {})):
+    for key in cur.get("dirs", {}):
         if key.startswith("trigram_"):
             col = key[len("trigram_"):]
-            live = man.get("trigram_for", {}).get(col) == cindex._docs_state()
+            live = cur.get("trigram_for", {}).get(col) == cindex._docs_state()
             if live and (upserts is None or col in upserts.columns):
                 tri_cols.append(col)
 
@@ -398,8 +393,6 @@ def apply_incremental(
 
         return w
 
-    from concurrent.futures import ThreadPoolExecutor
-
     writers = [] if skip_docs else [w_docs]
     if upserts is not None:
         writers += [w_blocks, w_doc_stats]
@@ -409,7 +402,7 @@ def apply_incremental(
         writers.append(w_ts_delta)
     if writers:
         with ThreadPoolExecutor(max_workers=len(writers)) as ex:
-            futures = [ex.submit(w) for w in writers]
+            futures = [ex.submit(inherit(w)) for w in writers]
             for f in futures:
                 f.result()
 
@@ -423,45 +416,10 @@ def apply_incremental(
         ]
         delta_idx.unpersist_intermediates()
 
-    if bucket_map is not None and skip_docs:
-        n_docs_total = sum(bucket_docs.values())  # no live row changed
-    elif bucket_map is not None:
+    bucket_rows = {}
+    if not skip_docs:
         bvals = obs_b.get
-        for b in touched:
-            nrows = int(bvals[f"b_{b}"] or 0)
-            if nrows:
-                bucket_map[str(b)] = f"{new_docs_dir}/_bucket={b}"
-                bucket_docs[str(b)] = nrows
-            else:
-                bucket_map.pop(str(b), None)
-                bucket_docs.pop(str(b), None)
-        man["docs_buckets"] = bucket_map
-        man["bucket_docs"] = bucket_docs
-        n_docs_total = sum(bucket_docs.values())
-    else:
-        n_docs_total = int(obs_n.get["n"])
-        man.setdefault(
-            "dirs", {k: k for k in ("docs", "doc_stats", "term_stats", "postings")}
-        )
-        man["dirs"] = {**man["dirs"], "docs": new_docs_dir}
-
-    # ---- manifest bookkeeping (exact integer updates)
-    for fld, n, dl in removed:
-        c = man["corpus"][fld]
-        c["n_docs"] -= n
-        c["total_dl"] -= dl
-    for fld, n, dl in added:
-        c = man["corpus"][fld]
-        c["n_docs"] += n
-        c["total_dl"] += dl
-    tombs = prev_tombs
-    for sname, ids in old_by_snap.items():
-        tombs[sname] = sorted(set(tombs.get(sname, [])) | ids)
-    man["tombstones"] = tombs
-    if added:
-        man["deltas"] = man.get("deltas", []) + [snap]
-    if wrote_ts:
-        man["ts_deltas"] = man.get("ts_deltas", []) + [snap]
+        bucket_rows = {str(b): int(bvals[f"b_{b}"] or 0) for b in touched}
     if tri_cols:
         # touched-id SIDECAR (ADVICE r4): one parquet per batch, shared
         # by every trigram column, referenced from the manifest by snap
@@ -471,33 +429,59 @@ def apply_incremental(
         _ids_frame(sorted({int(i) for i in aff_ids}), spark).write.mode(
             "overwrite"
         ).parquet(f"{cindex.path}/touched_ids/{snap}")
-    for col in tri_cols:
-        recs = man.setdefault("trigram_deltas", {}).setdefault(col, [])
-        recs.append(
+
+    def edit(man):
+        bm, bd = man["docs_buckets"], man.setdefault("bucket_docs", {})
+        for b, nrows in bucket_rows.items():
+            if nrows:
+                bm[b] = f"{new_docs_dir}/_bucket={b}"
+                bd[b] = nrows
+            else:
+                bm.pop(b, None)
+                bd.pop(b, None)
+
+        # ---- manifest bookkeeping (exact integer updates)
+        for fld, n, dl in removed:
+            c = man["corpus"][fld]
+            c["n_docs"] -= n
+            c["total_dl"] -= dl
+        for fld, n, dl in added:
+            c = man["corpus"][fld]
+            c["n_docs"] += n
+            c["total_dl"] += dl
+        tombs = man.setdefault("tombstones", {})
+        for sname, ids in old_by_snap.items():
+            tombs[sname] = sorted(set(tombs.get(sname, [])) | ids)
+        if added:
+            man["deltas"] = man.get("deltas", []) + [snap]
+        if wrote_ts:
+            man["ts_deltas"] = man.get("ts_deltas", []) + [snap]
+        for col in tri_cols:
+            recs = man.setdefault("trigram_deltas", {}).setdefault(col, [])
+            recs.append(
+                {
+                    "snap": snap,
+                    "touched_ref": snap,
+                    "has_rows": upserts is not None,
+                }
+            )
+            # stamp the POST-batch docs state: the gram view (base masked
+            # to later-touched ids + this delta) is exactly what the new
+            # docs table contains, so the index stays live
+            man.setdefault("trigram_for", {})[col] = store_mod._docs_state_of(man)
+        man["metrics"]["n_docs"] = sum(bd.values())
+        man.setdefault("lineage", []).append(
             {
-                "snap": snap,
-                "touched_ref": snap,
-                "has_rows": upserts is not None,
+                "snapshot": snap,
+                "op": "incremental",
+                "upserts": len(up_id_list),
+                "deletes": len(del_id_list),
+                "tombstoned": len(old_ids),
+                "wall_seconds": round(time.time() - t0, 3),
             }
         )
-        # stamp the POST-batch docs state: the gram view (base masked
-        # to later-touched ids + this delta) is exactly what the new
-        # docs table contains, so the index stays live
-        man.setdefault("trigram_for", {})[col] = store_mod._docs_state_of(man)
-    man["metrics"]["n_docs"] = n_docs_total
-    man.setdefault("lineage", []).append(
-        {
-            "snapshot": snap,
-            "op": "incremental",
-            "upserts": len(up_id_list),
-            "deletes": len(del_id_list),
-            "tombstoned": len(old_ids),
-            "wall_seconds": round(time.time() - t0, 3),
-        }
-    )
-    _commit(cindex.path, man)
-    cindex.manifest = man
-    return cindex
+
+    return cindex._next(edit)
 
 
 def compact(cindex: CompressedIndex) -> CompressedIndex:
@@ -515,29 +499,25 @@ def compact(cindex: CompressedIndex) -> CompressedIndex:
     - doc_stats: per-source union minus each source's tombstones.
     - term_stats: the live (base + signed deltas) view, materialized
       range-partitioned/sorted again.
+    - trigram deltas and a saved fuzzy dictionary: re-based (below).
     - docs: untouched — the bucketed docs table is already merged.
-    Corpus scalars come from the manifest's exact bookkeeping. Lineage
-    is preserved; delta dirs and superseded versions are dropped."""
+    Corpus scalars come from the manifest's exact bookkeeping. All
+    writes land before ONE commit, which returns the new handle;
+    lineage is preserved and superseded dirs are retired (`_retire`)."""
     spark = cindex.spark
-    man = copy.deepcopy(cindex.manifest)
+    cur = cindex.manifest
     t0 = time.time()
     snap = uuid.uuid4().hex[:12]
     tomb_bc = cindex.tombstones_bc()
-    prev_tombs = man.get("tombstones", {})
-    if isinstance(prev_tombs, list):
-        prev_tombs = {"base": prev_tombs}
-    avgdl_map = {
-        f: (v["total_dl"] / v["n_docs"] if v["n_docs"] else 1.0)
-        for f, v in man["corpus"].items()
-    }
-    bs = man["block_size"]
+    prev_tombs = cur.get("tombstones", {})
+    avgdl_map = _avgdl(cur)
+    bs = cur["block_size"]
 
-    dirs = dict(man.get("dirs", {k: k for k in ("docs", "doc_stats", "term_stats", "postings")}))
     new_dirs = {k: f"{k}_v_{snap}" for k in ("doc_stats", "term_stats", "postings")}
 
-    # the three rewrites are independent — driver threads overlap them;
+    # the rewrites are independent — driver threads overlap them;
     # shard metrics ride the postings write as an Observation
-    n_shards = int(man["n_shards"])
+    n_shards = int(cur["n_shards"])
     obs_blocks = Observation()
 
     def w_postings():
@@ -569,7 +549,7 @@ def compact(cindex: CompressedIndex) -> CompressedIndex:
     def w_doc_stats():
         ds_frames = []
         sources = [("base", cindex.dir_of("doc_stats"))] + [
-            (s, f"{cindex.path}/doc_stats_delta/{s}") for s in man.get("deltas", [])
+            (s, f"{cindex.path}/doc_stats_delta/{s}") for s in cur.get("deltas", [])
         ]
         for sname, spath in sources:
             fr = _mask_dead(spark.read.parquet(spath), prev_tombs.get(sname, []), spark)
@@ -595,106 +575,98 @@ def compact(cindex: CompressedIndex) -> CompressedIndex:
             .parquet(f"{cindex.path}/{new_dirs['term_stats']}")
         )
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as ex:
-        f_post = ex.submit(w_postings)
-        f_ds = ex.submit(w_doc_stats)
-        f_ts = ex.submit(w_term_stats)
-        f_post.result()
-        f_ds.result()
-        f_ts.result()
-
-    bvals = obs_blocks.get
-    man["metrics"]["shards"] = {
-        s: {"blocks": int(bvals[f"bl_{s}"] or 0), "postings": int(bvals[f"po_{s}"] or 0)}
-        for s in range(n_shards)
-        if int(bvals[f"bl_{s}"] or 0)
-    }
-
-    man["dirs"] = {**dirs, **new_dirs}
-    man["snapshot"] = snap
-    man["deltas"] = []
-    man["ts_deltas"] = []
-    man["tombstones"] = {}
-    man.setdefault("lineage", []).append(
-        {
-            "snapshot": snap,
-            "op": "compaction",
-            "wall_seconds": round(time.time() - t0, 3),
-        }
-    )
-    _commit(cindex.path, man)
-    cindex.manifest = man
-
     # fold pending trigram deltas into fresh bases: compact is the
     # bounded-growth point for the gram indexes exactly as it is for
     # postings/term_stats deltas — without this, the per-batch union
     # legs and manifest touched-id lists grow with total batches ever
-    # applied. fold_trigram writes FROM THE MASKED VIEW (base read +
-    # churn-bounded deltas), honoring compact's no-re-tokenize
-    # contract; it re-commits per column.
-    for col, recs in list(man.get("trigram_deltas", {}).items()):
-        if recs:
-            cindex.fold_trigram(col)
-    # the term_stats rewrite above invalidated any saved d=2 fuzzy
-    # dictionary (term_dict checks its base pointer) — re-save it from
-    # the just-compacted live view (a dictionary-sized scan, no
-    # tokenize) so AUTO d=2 fuzzy keeps its partition-pruned path
-    # instead of silently regressing to the length-band scan
-    if "term_dict" in man.get("dirs", {}):
-        cindex.save_term_dict(int(man.get("term_dict_pfx_len", 3)))
-    man = cindex.manifest
+    # applied. The fold writes FROM THE MASKED VIEW (base read +
+    # churn-bounded deltas), honoring the no-re-tokenize contract.
+    tri_cols = [c for c, recs in cur.get("trigram_deltas", {}).items() if recs]
+    # the term_stats rewrite invalidates a saved d=2 fuzzy dictionary
+    # (term_dict checks its base pointer) — re-save it from the live
+    # view, which holds exactly the rows the new term_stats base does
+    # (a dictionary-sized scan, no tokenize), so AUTO d=2 fuzzy keeps
+    # its partition-pruned path instead of regressing to the band scan
+    pfx_len = int(cur.get("term_dict_pfx_len", 3))
+    has_dict = "term_dict" in cur.get("dirs", {})
+    writers = [w_postings, w_doc_stats, w_term_stats]
+    writers += [lambda c=c: cindex._write_trigram_fold(c) for c in tri_cols]
+    if has_dict:
+        writers.append(lambda: cindex._write_term_dict(pfx_len))
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(writers)) as ex:
+        done = [f.result() for f in [ex.submit(inherit(w)) for w in writers]]
+    tri_dirs = dict(zip(tri_cols, done[3:]))
+    term_dict = done[-1] if has_dict else None
 
-    # drop delta dirs + EVERY unreferenced versioned dir (intermediate
-    # syncs orphan docs_v_* dirs once all their buckets are rewritten;
-    # compaction is the safe sweep point — keep anything the committed
-    # manifest still points into)
-    import re
-    import shutil
+    bvals = obs_blocks.get
+    shards = {
+        s: {"blocks": int(bvals[f"bl_{s}"] or 0), "postings": int(bvals[f"po_{s}"] or 0)}
+        for s in range(n_shards)
+        if int(bvals[f"bl_{s}"] or 0)
+    }
+    expired: list[str] = []
 
-    keep = set(man["dirs"].values())
-    for d in man.get("docs_buckets", {}).values():
-        keep.add(d.split("/", 1)[0])
-    for sub in ("postings_delta", "doc_stats_delta", "term_stats_delta"):
-        p = f"{cindex.path}/{sub}"
-        if os.path.exists(p):
-            shutil.rmtree(p)
-    versioned = re.compile(
-        r"^(docs|doc_stats|term_stats|postings|term_dict|trigram_.+)_v_"
-    )
-    for d in os.listdir(cindex.path):
-        if versioned.match(d) and d not in keep:
-            shutil.rmtree(f"{cindex.path}/{d}", ignore_errors=True)
-    # trigram delta snaps: keep only the ones the manifest still
-    # references (save_trigram folds deltas and drops its records —
-    # superseded snaps are orphans from then on)
-    tri_root = f"{cindex.path}/trigram_delta"
-    if os.path.exists(tri_root):
-        live = {
-            (col, r["snap"])
-            for col, recs in man.get("trigram_deltas", {}).items()
-            for r in recs
-        }
-        for col in os.listdir(tri_root):
-            cp = f"{tri_root}/{col}"
-            for s in os.listdir(cp):
-                if (col, s) not in live:
-                    shutil.rmtree(f"{cp}/{s}", ignore_errors=True)
-    # touched-id sidecars: orphaned once fold_trigram drops the delta
-    # records that referenced them
-    tid_root = f"{cindex.path}/touched_ids"
-    if os.path.exists(tid_root):
-        live_refs = {
-            r.get("touched_ref")
-            for recs in man.get("trigram_deltas", {}).values()
-            for r in recs
-        }
-        for s in os.listdir(tid_root):
-            if s not in live_refs:
-                shutil.rmtree(f"{tid_root}/{s}", ignore_errors=True)
-    cindex.manifest = man
-    return cindex
+    def edit(man):
+        man["metrics"]["shards"] = shards
+        man["dirs"] = {**man["dirs"], **new_dirs}
+        man["snapshot"] = snap
+        man["deltas"] = []
+        man["ts_deltas"] = []
+        man["tombstones"] = {}
+        for col, d in tri_dirs.items():
+            if d is not None:
+                store_mod._set_trigram(man, col, d)
+        if term_dict is not None:
+            store_mod._set_term_dict(man, term_dict, pfx_len)
+        man.setdefault("lineage", []).append(
+            {
+                "snapshot": snap,
+                "op": "compaction",
+                "wall_seconds": round(time.time() - t0, 3),
+            }
+        )
+        expired.extend(_retire(cindex.path, man, round(time.time(), 3)))
+
+    out = cindex._next(edit)
+    for d in expired:
+        shutil.rmtree(f"{cindex.path}/{d}", ignore_errors=True)
+    return out
+
+
+# every dir some snapshot may read: versioned rewrites and per-batch dirs
+_SNAPSHOT_GLOBS = (
+    "*_v_*", "postings_delta/*", "doc_stats_delta/*", "term_stats_delta/*",
+    "touched_ids/*", "trigram_delta/*/*",
+)
+
+
+def _retire(path: str, man: dict, now: float) -> list[str]:
+    """Retention instead of deletion (Iceberg's expire_snapshots
+    (older_than)): list in ``man["retired"]``, with the commit time
+    ``now``, every snapshot dir under ``path`` that ``man`` does not
+    read — superseded versions, folded deltas, a crashed writer's
+    leftovers — and drop the entries retired _RETAIN_S or more before.
+    Returns the dropped dirs, for deletion once ``man`` is committed."""
+    held = set(man.get("dirs", {}).values())
+    held |= {d.split("/", 1)[0] for d in (man.get("docs_buckets") or {}).values()}
+    for s in man.get("deltas", []):
+        held |= {f"postings_delta/{s}", f"doc_stats_delta/{s}"}
+    held |= {f"term_stats_delta/{s}" for s in man.get("ts_deltas", [])}
+    for col, recs in man.get("trigram_deltas", {}).items():
+        for r in recs:
+            held |= {f"trigram_delta/{col}/{r['snap']}", f"touched_ids/{r.get('touched_ref')}"}
+    kept, expired = [], []
+    for e in man.get("retired", []):
+        held |= set(e["dirs"])
+        (expired if now - e["unix"] >= _RETAIN_S else kept).append(e)
+    on_disk = {
+        os.path.relpath(p, path) for g in _SNAPSHOT_GLOBS for p in glob.glob(f"{path}/{g}")
+    }
+    if on_disk - held:
+        kept.append({"unix": now, "dirs": sorted(on_disk - held)})
+    man["retired"] = kept
+    return [d for e in expired for d in e["dirs"]]
 
 
 def sync(
@@ -963,50 +935,39 @@ def apply_counts(cindex: CompressedIndex, counts: DataFrame) -> CompressedIndex:
     NOT be O(corpus) is the join strategy: counts shuffle-joins
     (patch_counts), never a forced corpus-size broadcast."""
     docs = cindex.docs
-    id_col = cindex.manifest["doc_id_col"]
-    man = copy.deepcopy(cindex.manifest)
+    cur = cindex.manifest
+    id_col = cur["doc_id_col"]
     snap = uuid.uuid4().hex[:12]
     new_dir = f"docs_v_{snap}"
-    bucket_map = man.get("docs_buckets")
+    bucket_map = cur["docs_buckets"]
+    nb = int(cur["n_buckets"])
+    tb = (
+        counts.select(
+            F.pmod(F.col("doc_id").cast("long"), F.lit(nb)).cast("int").alias("_b")
+        )
+        .distinct()
+        .collect()
+    )
+    touched = sorted(int(r["_b"]) for r in tb if str(int(r["_b"])) in bucket_map)
+    if not touched:
+        return cindex
+    src = cindex.spark.read.parquet(
+        *[f"{cindex.path}/{bucket_map[str(b)]}" for b in touched]
+    )
+    (
+        patch_counts(src, counts, docs.columns, id_col)
+        .withColumn(
+            "_bucket", F.pmod(F.col(id_col).cast("long"), F.lit(nb)).cast("int")
+        )
+        .repartition(max(len(touched), 1), F.col("_bucket"))
+        .write.mode("overwrite")
+        .partitionBy("_bucket")
+        .parquet(f"{cindex.path}/{new_dir}")
+    )
 
-    def _patched(src: DataFrame) -> DataFrame:
-        return patch_counts(src, counts, docs.columns, id_col)
-
-    if bucket_map is not None:
-        nb = int(man["n_buckets"])
-        tb = (
-            counts.select(
-                F.pmod(F.col("doc_id").cast("long"), F.lit(nb)).cast("int").alias("_b")
-            )
-            .distinct()
-            .collect()
-        )
-        touched = sorted(int(r["_b"]) for r in tb if str(int(r["_b"])) in bucket_map)
-        if not touched:
-            return cindex
-        src = cindex.spark.read.parquet(
-            *[f"{cindex.path}/{bucket_map[str(b)]}" for b in touched]
-        )
-        (
-            _patched(src)
-            .withColumn(
-                "_bucket", F.pmod(F.col(id_col).cast("long"), F.lit(nb)).cast("int")
-            )
-            .repartition(max(len(touched), 1), F.col("_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(f"{cindex.path}/{new_dir}")
-        )
+    def edit(man):
         for b in touched:
-            bucket_map[str(b)] = f"{new_dir}/_bucket={b}"
-        man["docs_buckets"] = bucket_map
-    else:
-        _patched(docs).write.mode("overwrite").parquet(f"{cindex.path}/{new_dir}")
-        man.setdefault(
-            "dirs", {k: k for k in ("docs", "doc_stats", "term_stats", "postings")}
-        )
-        man["dirs"] = {**man["dirs"], "docs": new_dir}
-    man.setdefault("lineage", []).append({"snapshot": snap, "op": "enrichment"})
-    _commit(cindex.path, man)
-    cindex.manifest = man
-    return cindex
+            man["docs_buckets"][str(b)] = f"{new_dir}/_bucket={b}"
+        man.setdefault("lineage", []).append({"snapshot": snap, "op": "enrichment"})
+
+    return cindex._next(edit)

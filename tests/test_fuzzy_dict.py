@@ -11,6 +11,7 @@ dictionary (band fallback, still correct)."""
 
 from __future__ import annotations
 
+import copy
 import re
 
 from pyspark.sql import functions as F
@@ -18,7 +19,7 @@ from pyspark.sql import functions as F
 from lighthouse_spark.operators import expand
 from lighthouse_spark.sources import sync
 from lighthouse_spark.sources.corpus import synthetic_corpus
-from lighthouse_spark.sources.store import build_and_save, load_index
+from lighthouse_spark.sources.store import CompressedIndex, build_and_save
 
 Q2 = "sparklihgt"  # 2 edits from 'sparklight' → AUTO d=2 (len>5)
 Q1 = "scorr"       # 1 edit from 'score'      → AUTO d=1 (len 3-5)
@@ -26,6 +27,14 @@ Q1 = "scorr"       # 1 edit from 'score'      → AUTO d=1 (len 3-5)
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _without_dict(ci):
+    """A handle on ``ci``'s snapshot with the fuzzy-dictionary pointer
+    stripped (handles are immutable: edit a copy of the manifest)."""
+    man = copy.deepcopy(ci.manifest)
+    man["dirs"].pop("term_dict")
+    return CompressedIndex(ci.path, ci.spark, manifest=man)
 
 
 def test_fuzzy_dict_lifecycle(spark, tmp_path):
@@ -41,7 +50,7 @@ def test_fuzzy_dict_lifecycle(spark, tmp_path):
     assert "score" in band["content"][Q1]
 
     # --- save: pruned path must be value-identical to the band scan ---
-    ci.save_term_dict()
+    ci = ci.save_term_dict()
     got = ci.term_dict()
     assert got is not None and got[1] == 3
     pruned = expand.expand_fuzzy_fields(ci, ["content"], [Q2, Q1])
@@ -49,8 +58,7 @@ def test_fuzzy_dict_lifecycle(spark, tmp_path):
 
     # fuzzy_and_df parity: same index with the dict pointer popped
     # (forces the band path) must return identical (df, expansions)
-    ci_nodict = load_index(spark, path)
-    ci_nodict.manifest["dirs"].pop("term_dict")
+    ci_nodict = _without_dict(ci)
     df_a, fz_a = expand.fuzzy_and_df(ci, ["content"], [Q2, Q1, "merge"])
     df_b, fz_b = expand.fuzzy_and_df(ci_nodict, ["content"], [Q2, Q1, "merge"])
     assert fz_a == fz_b
@@ -101,26 +109,25 @@ def test_fuzzy_dict_lifecycle(spark, tmp_path):
     assert "sparklihg" in post["content"][Q2]
     assert "sparklight" in post["content"][Q2]
     # and a manually-stripped pointer still falls back to the band
-    ci_nod = load_index(spark, path)
-    ci_nod.manifest["dirs"].pop("term_dict")
+    ci_nod = _without_dict(ci)
     assert ci_nod.term_dict() is None
     band_post = expand.expand_fuzzy_fields(ci_nod, ["content"], [Q2])
     assert band_post == post
 
 
 def test_term_dict_resave_different_pfx_len(spark, tmp_path):
-    """Re-saving the dictionary with a different pfx_len on a LIVE
-    handle must serve the new layout: the epoch key includes the
-    versioned-dirs map + pfx_len, so the memoized pfx-2 frame can
-    never pair with pfx_len=3 predicates (which would silently match
-    zero partitions and kill all fuzzy expansion)."""
+    """Re-saving the dictionary with a different pfx_len must serve the
+    new layout: the re-save returns a new handle with its own memo, so
+    the pfx-2 frame memoized on the old handle can never pair with
+    pfx_len=3 predicates (which would silently match zero partitions
+    and kill all fuzzy expansion)."""
     docs = synthetic_corpus(spark, 120)
     ci = build_and_save(docs, "doc_id", {"content": "content"},
                         str(tmp_path / "idx"), mode="code", n_shards=4)
-    ci.save_term_dict(pfx_len=2)
+    ci = ci.save_term_dict(pfx_len=2)
     a = expand.expand_fuzzy_fields(ci, ["content"], [Q1])
     assert ci.term_dict()[1] == 2
-    ci.save_term_dict(pfx_len=3)
+    ci = ci.save_term_dict(pfx_len=3)
     assert ci.term_dict()[1] == 3
     b = expand.expand_fuzzy_fields(ci, ["content"], [Q1])
     assert b == a and "score" in b["content"][Q1]

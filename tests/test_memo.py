@@ -1,6 +1,7 @@
-"""The per-epoch memo (functions/memo.get) on a persisted store: a
-repeated identical request builds nothing, and a commit moves every
-memoized site to the new state, with no pre-commit plan left alive.
+"""The per-handle memo (functions/memo.get) on a persisted store: a
+repeated identical request builds nothing, and the handle a commit
+returns serves the new state at every memoized site, with no
+pre-commit plan left alive once the old handle is dropped.
 
 Builds are counted at LRU.get_or_build, the one path every lookup
 takes; no test reads the memo's own attributes.
@@ -9,9 +10,6 @@ takes; no test reads the memo's own attributes.
 from __future__ import annotations
 
 import gc
-import sys
-import threading
-import time
 import weakref
 
 import pytest
@@ -93,55 +91,3 @@ def test_memo_hits_then_commit_invalidates(spark, tmp_path, builds):
     gc.collect()
     alive = [name for name, ref in plans.items() if ref() is not None]
     assert alive == []
-
-
-class _Owner:
-    def __init__(self) -> None:
-        self.epoch = 0
-
-    def _epoch_key(self) -> int:
-        return self.epoch
-
-
-def test_get_never_serves_a_value_built_before_the_callers_epoch():
-    """Readers race a committer that keeps moving the epoch: a reader
-    that saw epoch e must never get a value built while the owner was
-    still before e (a build that races a commit lands in the dropped
-    cache)."""
-    owner = _Owner()
-    stale: list[tuple[int, int]] = []
-    stop = threading.Event()
-
-    def build() -> int:
-        epoch = owner.epoch  # the state a build reads, then works on
-        time.sleep(1e-4)
-        return epoch
-
-    def reader() -> None:
-        while not stop.is_set():
-            seen = owner.epoch
-            got = memo.get(owner, "k", build=build)
-            if got < seen:
-                stale.append((seen, got))
-
-    def committer() -> None:
-        while not stop.is_set():
-            owner.epoch += 1
-            time.sleep(1e-4)
-
-    threads = [threading.Thread(target=reader) for _ in range(16)]
-    threads.append(threading.Thread(target=committer))
-    old = sys.getswitchinterval()
-    sys.setswitchinterval(1e-5)
-    try:
-        for t in threads:
-            t.start()
-        time.sleep(1.0)
-    finally:
-        stop.set()
-        for t in threads:
-            t.join(timeout=10)
-        sys.setswitchinterval(old)
-    assert not any(t.is_alive() for t in threads)
-    assert owner.epoch > 100
-    assert stale == []

@@ -132,19 +132,19 @@ def test_lev_prefix_classes_cache_ignores_cap_order():
     """The cache stores the UNCAPPED class set and applies max_classes
     at lookup (ADVICE r3): a small-cap call must not poison a later
     big-cap call for the same (term, d), in either call order."""
-    from lighthouse_spark.operators.expand import _prefix_cache, lev_prefix_classes
+    from lighthouse_spark.operators.expand import _prefix_classes, lev_prefix_classes
 
-    _prefix_cache.clear()
+    _prefix_classes.cache_clear()
     assert lev_prefix_classes("spark", 1, max_classes=1) is None
     big = lev_prefix_classes("spark", 1, max_classes=100_000)
     assert big and len(big) > 1  # not the cached None/truncation
     # reverse order: big first, then small cap must still truncate
-    _prefix_cache.clear()
+    _prefix_classes.cache_clear()
     big2 = lev_prefix_classes("spark", 1, max_classes=100_000)
     assert big2 == big
     assert lev_prefix_classes("spark", 1, max_classes=1) is None
     # d=2 classes exist (uncapped) even though the default cap rejects
-    _prefix_cache.clear()
+    _prefix_classes.cache_clear()
     d2 = lev_prefix_classes("window", 2, max_classes=100_000)
     assert d2 and len(d2) > 512
 

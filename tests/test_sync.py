@@ -159,9 +159,9 @@ def test_compaction_preserves_results(spark, base, tmp_path):
 
 def test_failed_commit_leaves_live_handle_unchanged(spark, base, tmp_path, monkeypatch):
     """A commit that raises leaves the live handle on the committed
-    state, never a mix: manifest deep-equal and epoch unchanged, for a
-    batch, a compaction and a fuzzy-dictionary save. The retried commit
-    then succeeds and matches a rebuild."""
+    state, never a mix: manifest deep-equal, for a batch, a compaction
+    and a fuzzy-dictionary save. The retried commit then succeeds,
+    returns a new handle and matches a rebuild."""
     ci = base
     docs = ci.docs.cache()
     ids = [r["doc_id"] for r in docs.select("doc_id").orderBy("doc_id").limit(10).collect()]
@@ -174,21 +174,21 @@ def test_failed_commit_leaves_live_handle_unchanged(spark, base, tmp_path, monke
         raise OSError("injected commit failure")
 
     ops = [
-        (sync, lambda c: sync.apply_incremental(c, upserts=upd, delete_ids=dels)),
-        (sync, sync.compact),
-        (store, lambda c: c.save_term_dict() or c),
+        lambda c: sync.apply_incremental(c, upserts=upd, delete_ids=dels),
+        sync.compact,
+        lambda c: c.save_term_dict(),
     ]
-    for i, (mod, op) in enumerate(ops):
+    for i, op in enumerate(ops):
         before = copy.deepcopy(ci.manifest)
-        epoch = ci._epoch_key()
         with monkeypatch.context() as m:
-            m.setattr(mod, "_commit", boom)
+            m.setattr(store, "_commit", boom)
             with pytest.raises(OSError, match="injected"):
                 op(ci)
         assert ci.manifest == before, i
-        assert ci._epoch_key() == epoch, i
-        ci = op(ci)
-        assert ci._epoch_key() != epoch, i
+        new = op(ci)
+        assert new is not ci, i
+        assert ci.manifest == before, i
+        ci = new
         rb = _rebuild(spark, ci, tmp_path, f"rbcrash{i}")
         for q in QUERIES + ["crashterm"]:
             assert _topk(ci, q) == _topk(rb, q), (i, q)
@@ -238,12 +238,26 @@ def test_compacted_blocks_match_rebuild_bytes(spark, tmp_path):
     assert len(left) == len(right) and left == right
 
 
-def test_compaction_sweeps_orphaned_dirs(spark, base, tmp_path):
+def test_compaction_sweeps_orphaned_dirs(spark, base, tmp_path, monkeypatch):
     """Intermediate syncs orphan versioned dirs (a bucket rewritten
-    twice leaves the middle docs_v_* dir unreferenced); compaction must
-    leave ONLY dirs the committed manifest references."""
+    twice leaves the middle docs_v_* dir unreferenced), and compaction
+    supersedes the base and the deltas. A compaction retires every dir
+    its manifest stops referencing instead of deleting it; a later
+    compaction deletes the entries older than the retention, leaving
+    only referenced dirs plus its own retired entry."""
     import os
     import re
+
+    versioned = re.compile(r"^(docs|doc_stats|term_stats|postings)_v_")
+
+    def on_disk(c):
+        return {d for d in os.listdir(c.path) if versioned.match(d)}
+
+    def referenced(c):
+        keep = set(c.manifest["dirs"].values())
+        for d in c.manifest.get("docs_buckets", {}).values():
+            keep.add(d.split("/", 1)[0])
+        return keep
 
     ci = base
     docs = ci.docs.cache()
@@ -251,15 +265,25 @@ def test_compaction_sweeps_orphaned_dirs(spark, base, tmp_path):
     for word in ("sweepone", "sweeptwo"):
         upd = target.withColumn("content", F.lit(f"{word} alpha beta"))
         ci = sync.apply_incremental(ci, upserts=upd)
+    pre = ci
+    before = on_disk(ci)
     ci = sync.compact(ci)
-    keep = set(ci.manifest["dirs"].values())
-    for d in ci.manifest.get("docs_buckets", {}).values():
-        keep.add(d.split("/", 1)[0])
-    versioned = re.compile(r"^(docs|doc_stats|term_stats|postings)_v_")
-    on_disk = {d for d in os.listdir(ci.path) if versioned.match(d)}
-    assert on_disk <= keep, f"orphaned dirs survived compaction: {on_disk - keep}"
+    (entry,) = ci.manifest["retired"]
+    orphans = before - referenced(ci)
+    assert orphans and orphans <= set(entry["dirs"])
+    assert {d for d in entry["dirs"] if d.startswith("postings_delta/")}
+    assert on_disk(ci) == before | referenced(ci)  # nothing deleted yet
+    assert _topk(pre, "sweeptwo") == _topk(ci, "sweeptwo")  # old snapshot reads
+
+    monkeypatch.setattr(sync, "_RETAIN_S", 0)
+    upd = target.withColumn("content", F.lit("sweepthree alpha beta"))
+    ci = sync.compact(sync.apply_incremental(ci, upserts=upd))
+    (entry,) = ci.manifest["retired"]
+    survivors = on_disk(ci) - referenced(ci)
+    assert survivors <= set(entry["dirs"]), survivors
+    assert not any(os.path.exists(f"{ci.path}/{d}") for d in orphans)
     # and the index still answers correctly
-    assert [d for d, _ in _topk(ci, "sweeptwo", k=5)]
+    assert [d for d, _ in _topk(ci, "sweepthree", k=5)]
     assert _topk(ci, "sweepone") == []
 
 

@@ -201,7 +201,7 @@ def test_store_lifecycle_incremental_maintenance(spark, tmp_path):
                         mode="code", n_shards=4)
     assert ci.trigram_index("content") is None
 
-    ci.save_trigram("content")
+    ci = ci.save_trigram("content")
     assert ci.trigram_index("content") is not None
     row0 = docs.orderBy("doc_id").limit(1).collect()[0]
     needle = row0["content"][4:12]
@@ -230,12 +230,12 @@ def test_store_lifecycle_incremental_maintenance(spark, tmp_path):
     )
     ci = sync.apply_incremental(ci, upserts=some)
     assert len(_parity(ci, "another_marker")) == 2
-    ci.save_trigram("content")
+    ci = ci.save_trigram("content")
     assert not ci.manifest.get("trigram_deltas", {}).get("content")
     assert len(_parity(ci, "another_marker")) == 2
 
     # compaction AUTO-folds pending deltas into a fresh base (bounded
-    # growth), keeps the index live, and sweeps the orphaned snaps
+    # growth), keeps the index live, and retires the orphaned snaps
     import os
 
     more = ci.docs.orderBy("doc_id").limit(1).withColumn(
@@ -248,23 +248,23 @@ def test_store_lifecycle_incremental_maintenance(spark, tmp_path):
     assert ci.trigram_index("content") is not None
     assert len(_parity(ci, "another_marker")) == 2
     assert len(_parity(ci, "compact_pending_marker")) == 1
+    retired = {d for e in ci.manifest["retired"] for d in e["dirs"]}
     tri_root = f"{path}/trigram_delta/content"
-    assert (not os.path.exists(tri_root)) or os.listdir(f"{tri_root}") == [] or all(
-        os.listdir(f"{tri_root}/{c}") == [] for c in os.listdir(tri_root)
-    )
+    assert {f"trigram_delta/content/{s}" for s in os.listdir(tri_root)} <= retired
 
     # touched-id sidecars (ADVICE r4): the manifest never inlines the
     # churned id list — records carry a snap-keyed parquet reference —
-    # and compaction swept the orphaned sidecars along with the deltas
+    # and compaction retired the orphaned sidecars along with the deltas
     for recs in ci.manifest.get("trigram_deltas", {}).values():
         for r in recs:
             assert "touched" not in r and r.get("touched_ref")
     tid_root = f"{path}/touched_ids"
-    assert (not os.path.exists(tid_root)) or os.listdir(tid_root) == []
+    assert {f"touched_ids/{s}" for s in os.listdir(tid_root)} <= retired
 
     # an out-of-band docs rewrite (no incremental path) invalidates
-    ci.manifest["trigram_for"]["content"]["docs"] = "docs_v_someone_else"
-    assert ci.trigram_index("content") is None
+    man = copy.deepcopy(ci.manifest)
+    man["trigram_for"]["content"]["docs"] = "docs_v_someone_else"
+    assert CompressedIndex(path, spark, manifest=man).trigram_index("content") is None
 
 
 def test_touched_sidecar_written_and_legacy_inline_readable(spark, tmp_path):
@@ -276,7 +276,7 @@ def test_touched_sidecar_written_and_legacy_inline_readable(spark, tmp_path):
     path = str(tmp_path / "idx")
     ci = build_and_save(docs, "doc_id", {"content": "content"}, path,
                         mode="code", n_shards=2)
-    ci.save_trigram("content")
+    ci = ci.save_trigram("content")
     row0 = docs.orderBy("doc_id").limit(1).collect()[0]
     upd = ci.docs.orderBy("doc_id").limit(1).withColumn(
         "content", F.concat(F.lit("sidecar_marker_xyz "), F.col("content"))
