@@ -551,12 +551,6 @@ class CompressedIndex:
 
         return memo.get(self, "docs", build=build)
 
-    def bucket_of(self, doc_id: int) -> int:
-        """Docs-table bucket of a doc id — Python mirror of the Spark
-        `pmod(doc_id, n_buckets)` used at write time, so the sync
-        driver can route a batch to touched buckets without a job."""
-        return int(doc_id) % int(self.manifest.get("n_buckets", 1))
-
     @property
     def term_stats(self) -> DataFrame:
         """The LIVE term dictionary: base df + per-snapshot signed df

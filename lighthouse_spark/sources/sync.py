@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import shutil
 import time
@@ -54,7 +55,9 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from lighthouse_spark.plans.indexer import FieldSpec, build_index
+from lighthouse_spark.plans.indexer import (
+    FieldSpec, _field_aggregates, _index_over_aggregates, build_index,
+)
 from lighthouse_spark.sources import store as store_mod
 from lighthouse_spark.sources.store import CompressedIndex, POSTING_SCHEMA
 
@@ -115,6 +118,20 @@ def _union(frames: list[DataFrame]) -> DataFrame:
 # anti-join — the tombstone set is bounded by churn between
 # compactions, so the broadcast side stays small relative to the data.
 _ISIN_MAX = 10_000
+
+# Rows per Python tokenize task on the sync path. An Arrow UDF task
+# costs ~0.15 CPU-s of Python worker time on PySpark 4.1.2 however few
+# rows it gets (measured: 0.14-0.21 s per identity mapInArrow task over
+# a 200-row frame), and the analyzer tokenizes a claims field in ~3 µs
+# per row, so a task of 50k rows spends about as much on its rows as on
+# its fixed cost. A ~1% batch is one task per field; a 10^6-id catch-up
+# batch still spreads over 20.
+_ROWS_PER_TOKENIZE_TASK = 50_000
+
+
+def _tokenize_parts(rows: int) -> int:
+    """Partition count for a Python stage over ``rows`` batch rows."""
+    return max(1, math.ceil(rows / _ROWS_PER_TOKENIZE_TASK))
 
 
 def _filter_ids(fr: DataFrame, col, ids, spark, keep: bool, ids_df=None) -> DataFrame:
@@ -181,14 +198,22 @@ def apply_incremental(
     postings land in a delta snapshot dir; signed df deltas and exact
     corpus bookkeeping keep every statistic identical to a rebuild.
 
-    Spark-job budget per batch (all bounded by batch size except the
-    bucket rewrite, which reads only touched buckets):
-      1 collect of batch ids (skipped when the caller passes lists)
-      1 tagged doc_stats aggregation (old versions + removed dl/n)
-      1 delta-postings write        (upserts only)
+    Spark jobs per batch, as measured on a ~200-row cycle of the
+    benchmark's 20k-claim, 4-field `ingest` store (16; sync() adds its
+    metadata collect). Every Python stage runs in
+    `_tokenize_parts(batch rows)` partitions, so a small batch costs
+    one Python task per stage, not one per source or bucket partition:
+      1 collect of batch ids        (only when the caller passes no lists)
+      1 doc_stats footer read       (the schema every source reuses)
+      2 tagged doc_stats aggregation (old versions + removed dl/n)
+      2 delta-aggregate build       (every field in one cached frame)
+      1 docs footer read            (the docs view; the bucket read reuses it)
+      2 touched-bucket docs write   (+Observation: per-bucket counts)
+      2 delta-postings write        (upserts only)
       1 doc_stats-delta write       (+Observation: added dl/n)
-      1 term_stats-delta write      (signed df deltas)
-      1 touched-bucket docs write   (+Observation: per-bucket counts)
+      5 term_stats-delta write      (signed df deltas: one docs-scan
+                                     exchange per field for the replaced
+                                     versions, then the write)
     """
     spark = cindex.spark
     cur = cindex.manifest
@@ -214,6 +239,10 @@ def apply_incremental(
         )
     if not up_id_list:
         upserts = None
+    else:
+        # the upserts are batch-bounded: fold them into as few Python
+        # tasks as their row count needs (no exchange)
+        upserts = upserts.coalesce(_tokenize_parts(len(up_id_list)))
     aff_ids = sorted(set(up_id_list) | set(del_id_list))
     if not aff_ids:
         return cindex
@@ -231,8 +260,11 @@ def apply_incremental(
     sources = [("base", cindex.dir_of("doc_stats"))] + [
         (s, f"{cindex.path}/doc_stats_delta/{s}") for s in cur.get("deltas", [])
     ]
+    # every source shares one layout: infer it once, not per delta
+    ds_schema = spark.read.parquet(sources[0][1]).schema
     for sname, spath in sources:
-        fr = _filter_ids(spark.read.parquet(spath), F.col("doc_id"), aff_ids, spark, keep=True, ids_df=aff_df)
+        fr = spark.read.schema(ds_schema).parquet(spath)
+        fr = _filter_ids(fr, F.col("doc_id"), aff_ids, spark, keep=True, ids_df=aff_df)
         # rows already dead in this source must not re-count
         fr = _mask_dead(fr, prev_tombs.get(sname, []), spark)
         src_frames.append(fr.withColumn("_src", F.lit(sname)))
@@ -249,22 +281,29 @@ def apply_incremental(
     # ---- the old-versions aggregation and the delta-index
     # materialization are independent — overlap them from driver
     # threads (r8; they were serial, two full job latencies on the
-    # batch critical path). The delta index's cached per-doc aggregate
-    # is materialized here so the concurrent writers below never race
-    # to compute the tokenizer lineage.
+    # batch critical path). Every field's per-doc aggregate lives in ONE
+    # cached frame, materialized here by one action (a cache per field
+    # costs a materialization job per field), so the concurrent writers
+    # below never race to compute the tokenizer lineage.
     # every writer thread runs with the caller's job group and
     # scheduler pool (a plain pool thread drops both)
     inherit = inheritable_thread_target(spark)
-    delta_idx = None
+    mode = cur["analyzer_mode"]
+    delta_aggs = delta_idx = None
     pos_ts = None
     obs_ds = Observation()
     field_names = sorted(fields)
     with ThreadPoolExecutor(max_workers=2) as pre:
         f_old = pre.submit(inherit(old_rows_q.collect))
         if upserts is not None:
-            delta_idx = build_index(upserts, id_col, fields, cur["analyzer_mode"], cache_agg=True)
-            for a in delta_idx._intermediates:
-                a.count()
+            delta_aggs = store_mod._agg_union(
+                _field_aggregates(upserts, id_col, fields, mode)
+            ).persist()
+            delta_aggs.count()
+            delta_idx = _index_over_aggregates(
+                upserts, id_col, fields, mode,
+                [delta_aggs.filter(F.col("field") == f) for f in fields], keep=False,
+            )
             pos_ts = delta_idx.term_stats.select(
                 "field", "term", F.col("df").cast("long").alias("df")
             )
@@ -280,8 +319,13 @@ def apply_incremental(
     # to what was indexed), so the dictionary subtraction is exact.
     neg_ts = None
     if old_ids:
-        old_docs = _filter_ids(cindex.docs, F.col(id_col), sorted(old_ids), spark, keep=True)
-        old_idx = build_index(old_docs, id_col, fields, cur["analyzer_mode"])
+        # the id filter runs at the docs scan's parallelism (a catch-up
+        # batch can carry ~10^6 ids); an exchange then sizes the
+        # tokenize to the batch instead of the bucket-file count
+        old_docs = _filter_ids(
+            cindex.docs, F.col(id_col), sorted(old_ids), spark, keep=True
+        ).repartition(_tokenize_parts(len(old_ids)))
+        old_idx = build_index(old_docs, id_col, fields, mode)
         neg_ts = old_idx.term_stats.select(
             "field", "term", (-F.col("df")).cast("long").alias("df")
         )
@@ -290,7 +334,7 @@ def apply_incremental(
         # encode from the cached per-doc aggregates: one doc-level
         # shuffle, the same _encode_core as the full build
         blocks = store_mod._agg_blocks_arrow(
-            delta_idx._intermediates, cur["n_shards"], cur["block_size"], _avgdl(cur)
+            [delta_aggs], cur["n_shards"], cur["block_size"], _avgdl(cur)
         )
         blocks.write.mode("overwrite").parquet(f"{cindex.path}/postings_delta/{snap}")
 
@@ -330,7 +374,8 @@ def apply_incremental(
     parts = []
     existing = [b for b in touched if str(b) in bucket_map]
     if existing:
-        old_b = spark.read.parquet(
+        # same leaf-dir layout as the docs view: reuse its schema
+        old_b = spark.read.schema(cindex.docs.schema).parquet(
             *[f"{cindex.path}/{bucket_map[str(b)]}" for b in existing]
         )
         parts.append(_filter_ids(old_b.select(doc_cols), F.col(id_col), aff_ids, spark, keep=False, ids_df=aff_df))
@@ -414,7 +459,7 @@ def apply_incremental(
             for fn in field_names
             if int(vals[f"n_{fn}"] or 0)
         ]
-        delta_idx.unpersist_intermediates()
+        delta_aggs.unpersist()
 
     bucket_rows = {}
     if not skip_docs:
@@ -690,43 +735,36 @@ def sync(
     try:
         state = SyncState.load(state_path)
         start = int(time.time())
-        batch = plan_batch(source, state, id_col, modified_col)
         doc_col = cindex.manifest["doc_id_col"]
-        meta = batch.select(
-            F.col(id_col).alias("_cur"),
-            F.col(doc_col).cast("long").alias("_id"),
-            F.col(bid_state_col).alias("_bs"),
-        ).collect()
-        if not meta:
-            state.last_sync_unix = start
-            state.save(state_path)
-            return cindex
-        dead = {"Spent", "Expired"}
-        up_ids = [int(r["_id"]) for r in meta if r["_bs"] not in dead]
-        del_ids = [int(r["_id"]) for r in meta if r["_bs"] in dead]
-        upserts = None
-        if up_ids:
-            # Pin the batch (ADVICE r2 #2): the delta/bucket writes
-            # lazily re-evaluate this frame; on a mutable source (JDBC)
-            # rows arriving between the metadata collect and the writes
-            # would otherwise be indexed but uncounted. The id filter
-            # bounds membership to the collected metadata and persist+
-            # count freezes the row content for every downstream read.
-            upserts = _filter_ids(
-                batch.filter(~F.col(bid_state_col).isin(*sorted(dead))),
-                F.col(doc_col).cast("long"), up_ids, source.sparkSession, keep=True,
-            ).persist()
-            upserts.count()
+        # Pin the batch (ADVICE r2 #2): persisted BEFORE the metadata
+        # collect, which materializes the cache, so the collect and
+        # every writer read one materialization. On a mutable source
+        # (JDBC) rows arriving or changing after the collect are never
+        # indexed uncounted, and a nondeterministic column is evaluated
+        # once for the docs table and the postings alike.
+        batch = plan_batch(source, state, id_col, modified_col).persist()
         try:
-            cindex = apply_incremental(
-                cindex, upserts=upserts, up_id_list=up_ids, del_id_list=del_ids
-            )
+            meta = batch.select(
+                F.col(id_col).alias("_cur"),
+                F.col(doc_col).cast("long").alias("_id"),
+                F.col(bid_state_col).alias("_bs"),
+            ).collect()
+            if meta:
+                dead = {"Spent", "Expired"}
+                up_ids = [int(r["_id"]) for r in meta if r["_bs"] not in dead]
+                del_ids = [int(r["_id"]) for r in meta if r["_bs"] in dead]
+                upserts = (
+                    batch.filter(~F.col(bid_state_col).isin(*sorted(dead)))
+                    if up_ids else None
+                )
+                cindex = apply_incremental(
+                    cindex, upserts=upserts, up_id_list=up_ids, del_id_list=del_ids
+                )
+                state.last_id = max(int(r["_cur"]) for r in meta)
+                state.started_unix = state.started_unix or start
         finally:
-            if upserts is not None:
-                upserts.unpersist()
-        state.last_id = max(int(r["_cur"]) for r in meta)
+            batch.unpersist()
         state.last_sync_unix = start
-        state.started_unix = state.started_unix or start
         state.save(state_path)
         return cindex
     finally:

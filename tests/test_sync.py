@@ -11,6 +11,7 @@ from __future__ import annotations
 import copy
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from lighthouse_spark.functions.analysis import tokenize_text
@@ -457,3 +458,109 @@ def test_process_blocked_list_full_job(spark, tmp_path):
     assert ci.docs.filter(F.col("claim_id") == chan["claim_id"]).count() == 0
     assert ci.docs.filter(F.col("channel_claim_id") == chan["claim_id"]).count() == 0
     assert after == before - n_static - n_chan_docs - n_pub
+
+
+POS_FIELDS = {c: FieldSpec(c, positions=True) for c in ("content", "path", "repo", "lang")}
+
+# Spark work of the one sync cycle in test_sync_cycle_budget, measured on
+# local[8] with 8 shuffle partitions. Tokenizing in source-sized
+# partitions with a cache per field ran 27 jobs and 251 tasks.
+CYCLE_JOBS = 16
+CYCLE_TASKS = 74
+
+
+def _group_work(sc, group):
+    """(jobs, tasks run) of a job group, once the listener bus drained."""
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    infos = [tracker.getStageInfo(s) for s in stages]
+    return len(jobs), sum(i.numCompletedTasks for i in infos if i is not None)
+
+
+def test_sync_cycle_budget(spark, tmp_path):
+    """One sync cycle of a 20-row batch (edits, new docs, Spent rows) on a
+    4-field positional store costs at most CYCLE_JOBS jobs and
+    CYCLE_TASKS tasks, and its results equal a rebuild."""
+    docs = synthetic_corpus(spark, 400)
+    ci = build_and_save(docs, "doc_id", POS_FIELDS, str(tmp_path / "idx"), mode="code", n_shards=4)
+    pdf = ci.docs.orderBy("doc_id").limit(20).toPandas()
+    pdf.loc[:9, "content"] = "budgetedit " + pdf.loc[:9, "content"]
+    new = pdf.loc[10:15].index
+    pdf.loc[new, "doc_id"] += 1
+    pdf.loc[new, "path"] = "new/" + pdf.loc[new, "path"]
+    pdf.loc[new, "content"] = "budgetnew " + pdf.loc[new, "content"]
+    assert not set(pdf.loc[new, "doc_id"]) & {r[0] for r in ci.docs.select("doc_id").collect()}
+    src = pdf.assign(
+        id=range(1, 21), modified_at=100, bid_state=["Accepted"] * 16 + ["Spent"] * 4
+    )
+    source = spark.createDataFrame(src)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("sync-budget", "one sync cycle")
+    try:
+        ci = sync.sync(ci, source, str(tmp_path / "state.json"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs, tasks = _group_work(sc, "sync-budget")
+    assert jobs <= CYCLE_JOBS, jobs
+    assert tasks <= CYCLE_TASKS, tasks
+
+    staged = str(tmp_path / "live_docs")
+    ci.docs.write.mode("overwrite").parquet(staged)
+    rb = build_and_save(
+        spark.read.parquet(staged), "doc_id", POS_FIELDS,
+        str(tmp_path / "rb"), mode="code", n_shards=4,
+    )
+    assert ci.docs.count() == 400 + 6 - 4
+    assert {d for d, _ in _topk(ci, "budgetedit", k=30)} == set(pdf.loc[:9, "doc_id"])
+    assert {d for d, _ in _topk(ci, "budgetnew", k=30)} == set(pdf.loc[new, "doc_id"])
+    for q in QUERIES:
+        assert _topk(ci, q) == _topk(rb, q), q
+    assert ci.corpus_stats() == pytest.approx(rb.corpus_stats())
+    live = {(r["field"], r["term"]): r["df"] for r in ci.term_stats.collect()}
+    assert live == {(r["field"], r["term"]): r["df"] for r in rb.term_stats.collect()}
+
+
+def test_sync_batch_pinned_for_every_writer(spark, base, tmp_path, monkeypatch):
+    """The batch a cycle indexes is the one its metadata collect saw: a
+    text column from a nondeterministic Python UDF that reads a file is
+    evaluated once, so rewriting the file before `apply_incremental`
+    runs changes neither the docs table nor the postings, and both agree."""
+    from lighthouse_spark.functions.analysis import tokenize_pandas
+
+    text_file = tmp_path / "text.txt"
+    text_file.write_text("pinfirst alpha")
+
+    @F.udf("string")
+    def read_text(doc_id):
+        with open(text_file) as f:
+            return f"{f.read()} doc{doc_id}"
+
+    ids = [r["doc_id"] for r in base.docs.select("doc_id").orderBy("doc_id").limit(5).collect()]
+    source = (
+        base.docs.filter(F.col("doc_id").isin(ids))
+        .withColumn("content", read_text.asNondeterministic()("doc_id"))
+        .withColumn("id", F.dense_rank().over(Window.orderBy("doc_id")).cast("long"))
+        .withColumn("modified_at", F.lit(100))
+        .withColumn("bid_state", F.lit("Accepted"))
+    )
+    orig = sync.apply_incremental
+
+    def rewrite_then_apply(*a, **kw):
+        text_file.write_text("pinsecond beta")
+        return orig(*a, **kw)
+
+    monkeypatch.setattr(sync, "apply_incremental", rewrite_then_apply)
+    ci = sync.sync(base, source, str(tmp_path / "state.json"))
+
+    rows = ci.docs.filter(F.col("doc_id").isin(ids)).select("doc_id", "content").collect()
+    assert {r["content"] for r in rows} == {f"pinfirst alpha doc{i}" for i in ids}
+    assert {d for d, _ in _topk(ci, "pinfirst", k=10)} == set(ids)
+    assert _topk(ci, "pinsecond") == []
+    live = ci.docs.select("content").toPandas()["content"]
+    dl = tokenize_pandas(live, "code").map(len)
+    n = int((dl > 0).sum())
+    assert ci.corpus_stats()["content"] == pytest.approx((n, float(dl.sum()) / n))
