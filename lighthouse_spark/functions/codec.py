@@ -48,29 +48,7 @@ def varint_encode_with_lengths(values: np.ndarray) -> tuple[bytes, np.ndarray]:
 
 def varint_encode(values: np.ndarray) -> bytes:
     """LEB128-encode a uint64 array."""
-    arr = np.asarray(values, dtype=np.uint64)
-    if arr.size == 0:
-        return b""
-    nbytes = np.ones(arr.size, dtype=np.int64)
-    v = arr >> np.uint64(7)
-    while v.any():
-        nbytes += (v > 0).astype(np.int64)
-        v >>= np.uint64(7)
-    out = np.zeros(int(nbytes.sum()), dtype=np.uint8)
-    pos = np.zeros(arr.size, dtype=np.int64)
-    pos[1:] = np.cumsum(nbytes)[:-1]
-    vals = arr.copy()
-    k = 0
-    while True:
-        mask = nbytes > k
-        if not mask.any():
-            break
-        byte = (vals[mask] & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nbytes[mask] - 1 > k).astype(np.uint8)
-        out[pos[mask] + k] = byte | (cont << 7)
-        vals = np.where(mask, vals >> np.uint64(7), vals)
-        k += 1
-    return out.tobytes()
+    return varint_encode_with_lengths(values)[0]
 
 
 def varint_decode(buf: bytes) -> np.ndarray:

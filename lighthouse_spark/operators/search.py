@@ -20,8 +20,9 @@ Scale notes:
 from __future__ import annotations
 
 from collections import Counter
+from functools import partial
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -342,21 +343,15 @@ def phrase(
             lucene_sloppy_freq_rpt,
         )
 
-        _slop = int(slop)
-        if len(set(terms)) == len(terms):
+        _freq = (
+            partial(lucene_sloppy_freq, slop=int(slop))
+            if len(set(terms)) == len(terms)
+            else partial(lucene_sloppy_freq_rpt, slop=int(slop), group_ids=tuple(terms))
+        )
 
-            @F.pandas_udf("double")
-            def _sloppy(pls: pd.Series) -> pd.Series:
-                return pls.map(lambda ls: lucene_sloppy_freq(list(ls), _slop))
-
-        else:
-            _groups = tuple(terms)
-
-            @F.pandas_udf("double")
-            def _sloppy(pls: pd.Series) -> pd.Series:
-                return pls.map(
-                    lambda ls: lucene_sloppy_freq_rpt(list(ls), _slop, _groups)
-                )
+        @F.arrow_udf("double")
+        def _sloppy(pls: pa.Array) -> pa.Array:
+            return pa.array([_freq(ls) for ls in pls.to_pylist()], pa.float64())
 
         freq = _sloppy(F.array(*[look(t) for t in terms]))
     else:

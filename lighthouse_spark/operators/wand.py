@@ -7,7 +7,7 @@ search.go:92-101), implemented as:
     postings blocks, filtered to the query terms     (parquet scan —
         partition pruning on shard dirs is free; term IN-list pushes
         into row-group stats since blocks are term-sorted)
-    → groupBy(shard) applyInPandas(kernel)           (shard-local top-k)
+    → groupBy(shard) applyInArrow(kernel)            (shard-local top-k)
     → global orderBy(score desc, doc_id asc).limit(k)  (tiny merge)
 
 Kernel = vectorized block-max WAND of the MaxScore/essential-lists
@@ -34,22 +34,23 @@ exact w.r.t. the exhaustive scorer:
      tie-break. Pruning never changes results: every skipped doc has
      a certified upper bound < θ ≤ the true kth-best score.
 
-Everything inside the kernel is numpy over decoded arrays — no
+Everything inside the kernel is numpy over the arrays of the store's
+one block decoder (store._decode_blocks) — no per-block or
 per-document Python loops.
 """
 
 from __future__ import annotations
 
-import math
+from collections import Counter
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lighthouse_spark.functions import codec, memo
+from lighthouse_spark.functions import memo
 from lighthouse_spark.operators.scoring import B, K1, idf_py
-from lighthouse_spark.sources.store import CompressedIndex
+from lighthouse_spark.sources.store import CompressedIndex, _decode_blocks
 
 OUT_SCHEMA = "doc_id long, score double"
 
@@ -58,73 +59,70 @@ def _score(tfs: np.ndarray, dls: np.ndarray, idf: float, avgdl: float) -> np.nda
     return idf * (tfs * (K1 + 1.0)) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
 
 
+def _out(ids: np.ndarray, scores: np.ndarray) -> pa.Table:
+    return pa.table(
+        {"doc_id": pa.array(ids, pa.int64()), "score": pa.array(scores, pa.float64())}
+    )
+
+
+def _decode_by_term(tbl: pa.Table, tomb: dict[str, np.ndarray]):
+    """Decode one shard's query blocks (store._decode_blocks) and sort
+    the live postings by (term, doc_id), terms in lexicographic order:
+    (ids, tfs, dls, row_of, codes, names) with ``codes`` indexing
+    ``names``."""
+    ids, tfs, dls, row_of, _, _ = _decode_blocks(tbl, tomb)
+    denc = tbl["term"].combine_chunks().dictionary_encode()
+    found = denc.dictionary.to_pylist()
+    by_name = np.argsort(np.asarray(found, dtype=object))
+    rank = np.empty(len(found), dtype=np.int64)
+    rank[by_name] = np.arange(len(found))
+    codes = rank[denc.indices.to_numpy()][row_of]
+    names = [found[i] for i in by_name]
+    srt = np.lexsort((ids, codes))
+    return (
+        ids[srt], tfs[srt].astype(np.float64), dls[srt].astype(np.float64),
+        row_of[srt], codes[srt], names,
+    )
+
+
 def _kernel(
-    pdf: pd.DataFrame,
+    tbl: pa.Table,
     idf: dict[str, float],
     qtf: dict[str, float],
     avgdl: float,
     k: int,
     tomb: dict[str, np.ndarray],
-) -> pd.DataFrame:
-    """Shard-local block-max top-k. `pdf` holds this shard's blocks for
+) -> pa.Table:
+    """Shard-local block-max top-k. `tbl` holds this shard's blocks for
     the query terms only. Tombstoned docs (dead postings of each
-    source snapshot after incremental updates) are masked immediately
-    after decode, BEFORE the bootstrap threshold, so pruning stays
-    exact. Block-max bounds are rescaled by max(1, avgdl/enc_avgdl) —
-    tfn grows at most linearly in avgdl, so the stored bound stays an
-    upper bound under avgdl drift."""
+    source snapshot after incremental updates) are masked by the
+    decoder, BEFORE the bootstrap threshold, so pruning stays exact;
+    a block left with no live posting bounds nothing. Block-max bounds
+    are rescaled by max(1, avgdl/enc_avgdl) — tfn grows at most
+    linearly in avgdl, so the stored bound stays an upper bound under
+    avgdl drift."""
+    ids, tfs, dls, row_of, codes, names = _decode_by_term(tbl, tomb)
+    max_tfn = tbl["max_tfn"].to_numpy()
+    safety = np.maximum(1.0, avgdl / tbl["enc_avgdl"].to_numpy())
     terms: dict[str, dict] = {}
-    for term, g in pdf.groupby("term", sort=True):
-        w = idf[term] * qtf[term]
-        ids_l: list[np.ndarray] = []
-        tfs_l: list[np.ndarray] = []
-        dls_l: list[np.ndarray] = []
-        bm_l: list[float] = []
-        bo_l: list[np.ndarray] = []
-        for row in g.itertuples(index=False):
-            ids = codec.delta_decode(bytes(row.doc_ids_enc))
-            t = tomb.get(row.snapshot)
-            live = None
-            if t is not None and t.size:
-                live = ~np.isin(ids, t)
-                if not live.any():
-                    continue
-                ids = ids[live]
-            tfs = codec.varint_decode(bytes(row.tfs_enc)).astype(np.float64)
-            dls = codec.varint_decode(bytes(row.dls_enc)).astype(np.float64)
-            if live is not None:
-                tfs, dls = tfs[live], dls[live]
-            bi = len(bm_l)
-            safety = max(1.0, avgdl / row.enc_avgdl)
-            bm_l.append(row.max_tfn * safety * w)
-            ids_l.append(ids)
-            tfs_l.append(tfs)
-            dls_l.append(dls)
-            bo_l.append(np.full(ids.size, bi, dtype=np.int64))
-        if not ids_l:
+    cuts = np.flatnonzero(np.diff(codes)) + 1
+    for lo, hi in zip(np.append(0, cuts), np.append(cuts, ids.size)):
+        if hi == lo:
             continue
-        ids = np.concatenate(ids_l)
-        tfs = np.concatenate(tfs_l)
-        dls = np.concatenate(dls_l)
-        block_of = np.concatenate(bo_l)
-        block_max = np.array(bm_l)
-        # re-sort: deltas interleave with base doc-id ranges (no
-        # duplicates can survive the per-snapshot masking)
-        srt = np.argsort(ids, kind="mergesort")
-        ids, tfs, dls, block_of = ids[srt], tfs[srt], dls[srt], block_of[srt]
-        terms[term] = {
-            "ids": ids,
-            "tfs": tfs,
-            "dls": dls,
+        name = names[codes[lo]]
+        w = idf[name] * qtf[name]
+        rows = row_of[lo:hi]
+        bound = max_tfn[rows] * safety[rows] * w  # each posting's block bound
+        terms[name] = {
+            "ids": ids[lo:hi],
+            "tfs": tfs[lo:hi],
+            "dls": dls[lo:hi],
             "w": w,
-            "max_impact": float(block_max.max()),
-            "block_max": block_max,
-            "block_of": block_of,
+            "max_impact": float(bound.max()),
+            "bound": bound,
         }
     if not terms:
-        return pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
+        return _out([], [])
 
     order = sorted(terms, key=lambda t: terms[t]["max_impact"])  # ascending
     total_max = sum(terms[t]["max_impact"] for t in order)
@@ -168,12 +166,7 @@ def _kernel(
             break
         td = terms[t]
         others = total_max - td["max_impact"]
-        keep_blocks = (td["block_max"] + others) >= theta
-        cand = (
-            td["ids"]
-            if keep_blocks.all()
-            else td["ids"][keep_blocks[td["block_of"]]]
-        )
+        cand = td["ids"][(td["bound"] + others) >= theta]
         if scored_ids.size and cand.size:
             pos = np.searchsorted(scored_ids, cand)
             pos_c = np.minimum(pos, scored_ids.size - 1)
@@ -194,12 +187,8 @@ def _kernel(
             )
 
     # 4. top-k over the fully-scored pool
-    if scored_ids.size == 0:
-        return pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
     idx = np.lexsort((scored_ids, -scored_s))[:k]
-    return pd.DataFrame({"doc_id": scored_ids[idx], "score": scored_s[idx]})
+    return _out(scored_ids[idx], scored_s[idx])
 
 
 def wand_topk(
@@ -218,13 +207,12 @@ def wand_topk(
     )
 
 
-def _wand_topk_build(
-    cindex: CompressedIndex,
-    field: str,
-    terms: list[str],
-    k: int,
-    boost: float,
-) -> DataFrame:
+def _per_shard_topk(cindex, field, terms, k, boost, shard_fn) -> DataFrame:
+    """The scorers' shared plan over ONE snapshot handle: idf/qtf from
+    the live dictionary, the query terms' block rows of ``field``,
+    ``shard_fn(tbl, idf, qtf, avgdl, k, tomb)`` per shard
+    (groupBy(shard).applyInArrow), then the global (score desc,
+    doc_id asc) top-k merge."""
     spark = cindex.spark
     uniq = sorted(set(terms))
     if not uniq:
@@ -235,8 +223,6 @@ def _wand_topk_build(
     if n == 0 or not present:
         return spark.createDataFrame([], OUT_SCHEMA)
     idf = {t: idf_py(dfm[t], n) * boost for t in present}
-    from collections import Counter
-
     counts = Counter(terms)
     qtf = {t: float(counts[t]) for t in present}
 
@@ -249,11 +235,32 @@ def _wand_topk_build(
     # tombstones ship as a broadcast — tasks capture only the handle
     tomb_bc = cindex.tombstones_bc()
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _kernel(pdf, idf, qtf, avgdl, k, tomb_bc.value)
+    def run(tbl):
+        return shard_fn(tbl, idf, qtf, avgdl, k, tomb_bc.value)
 
-    per_shard = blocks.groupBy("shard").applyInPandas(run, OUT_SCHEMA)
+    per_shard = blocks.groupBy("shard").applyInArrow(run, OUT_SCHEMA)
     return per_shard.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+
+
+def _wand_topk_build(
+    cindex: CompressedIndex,
+    field: str,
+    terms: list[str],
+    k: int,
+    boost: float,
+) -> DataFrame:
+    return _per_shard_topk(cindex, field, terms, k, boost, _kernel)
+
+
+def _exhaustive(tbl, idf, qtf, avgdl, k, tomb) -> pa.Table:
+    """Decode every block, score every live posting, no pruning."""
+    ids, tfs, dls, _, codes, names = _decode_by_term(tbl, tomb)
+    w_of = np.array([idf[t] * qtf[t] for t in names])
+    uniq_ids, inv = np.unique(ids, return_inverse=True)
+    tot = np.zeros(uniq_ids.size)
+    np.add.at(tot, inv, _score(tfs, dls, w_of[codes], avgdl))
+    idx = np.lexsort((uniq_ids, -tot))[:k]
+    return _out(uniq_ids[idx], tot[idx])
 
 
 def exhaustive_topk(
@@ -261,55 +268,4 @@ def exhaustive_topk(
 ) -> DataFrame:
     """Reference scorer over the same compressed blocks (decode all,
     no pruning) — the equivalence baseline for tests."""
-    spark = cindex.spark
-    uniq = sorted(set(terms))
-    if not uniq:
-        return spark.createDataFrame([], OUT_SCHEMA)
-    n, avgdl = cindex.corpus_stats().get(field, (0, 1.0))
-    dfm = cindex.df_map(field, uniq)
-    present = [t for t in uniq if t in dfm]
-    if n == 0 or not present:
-        return spark.createDataFrame([], OUT_SCHEMA)
-    idf = {t: idf_py(dfm[t], n) * boost for t in present}
-    from collections import Counter
-
-    counts = Counter(terms)
-    qtf = {t: float(counts[t]) for t in present}
-
-    blocks = cindex.postings.filter(
-        (F.col("field") == field) & F.col("term").isin(present)
-    ).select(
-        "shard", "term", "block_id", "n_docs", "doc_ids_enc", "tfs_enc",
-        "dls_enc", "snapshot",
-    )
-    tomb_bc = cindex.tombstones_bc()
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        tomb = tomb_bc.value
-        ids_all = []
-        scores_all = []
-        for term, g in pdf.groupby("term"):
-            for row in g.itertuples(index=False):
-                ids = codec.delta_decode(bytes(row.doc_ids_enc))
-                tfs = codec.varint_decode(bytes(row.tfs_enc)).astype(np.float64)
-                dls = codec.varint_decode(bytes(row.dls_enc)).astype(np.float64)
-                t = tomb.get(row.snapshot)
-                if t is not None and t.size:
-                    live = ~np.isin(ids, t)
-                    ids, tfs, dls = ids[live], tfs[live], dls[live]
-                ids_all.append(ids)
-                scores_all.append(_score(tfs, dls, idf[term] * qtf[term], avgdl))
-        if not ids_all:
-            return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-        ids = np.concatenate(ids_all)
-        sc = np.concatenate(scores_all)
-        uniq_ids, inv = np.unique(ids, return_inverse=True)
-        tot = np.zeros(uniq_ids.size)
-        np.add.at(tot, inv, sc)
-        idx = np.lexsort((uniq_ids, -tot))[:k]
-        return pd.DataFrame({"doc_id": uniq_ids[idx], "score": tot[idx]})
-
-    per_shard = blocks.groupBy("shard").applyInPandas(run, OUT_SCHEMA)
-    return per_shard.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return _per_shard_topk(cindex, field, terms, k, boost, _exhaustive)

@@ -68,7 +68,6 @@ import time
 import uuid
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -123,7 +122,8 @@ def _binary_offsets(lens: np.ndarray, bounds: np.ndarray) -> np.ndarray:
     (posting indices) over one buffer whose per-posting byte lengths
     are ``lens``. A buffer past 2^31-1 bytes would wrap the int32
     offsets and silently corrupt every later block, so it raises
-    instead (shrink the group: more shards)."""
+    instead (shrink the group: more shards). The flat view's positions
+    list offsets come from here too (one window per posting)."""
     off = np.zeros(lens.size + 1, dtype=np.int64)
     np.cumsum(lens, out=off[1:])
     if off[-1] > np.iinfo(np.int32).max:
@@ -239,6 +239,93 @@ def _encode_core(
         ],
         _BLOCK_COLS,
     )
+
+
+def _bin_values(col) -> np.ndarray:
+    """The bytes of every value of a binary column, concatenated in row
+    order: a zero-copy view of its Arrow values buffer between the
+    first and last offsets (nulls must span no bytes)."""
+    import pyarrow as pa
+
+    arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
+    _, offsets, values = arr.buffers()
+    if len(arr) == 0 or values is None:
+        return np.zeros(0, dtype=np.uint8)
+    odt = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    off = np.frombuffer(
+        offsets, dtype=odt, count=len(arr) + 1,
+        offset=arr.offset * np.dtype(odt).itemsize,
+    )
+    return np.frombuffer(values, dtype=np.uint8)[off[0]:off[-1]]
+
+
+def _decode_blocks(tbl, tomb: dict[str, np.ndarray]):
+    """THE block decoder, the inverse of _encode_core: a ``pa.Table``
+    of block rows (n_docs, doc_ids_enc, tfs_enc, dls_enc, snapshot and,
+    optionally, positions_enc) -> flat per-posting numpy arrays
+    ``(ids, tfs, dls, row_of, flat_pos, plens)`` in row order, with
+    the docs dead in each row's source snapshot (``tomb``) masked out.
+
+    ``row_of`` is each posting's block row; ``flat_pos``/``plens`` are
+    the concatenated ABSOLUTE positions and per-posting counts, or
+    None when the table has no (or an all-null) positions column.
+    Each binary column decodes in ONE varint pass over its concatenated
+    Arrow buffer: doc ids by a segmented cumsum restarted at each
+    block's zigzag absolute, positions via the count-slot walk
+    (codec.position_slots, one Python step per posting). Every block
+    read — compaction, the WAND kernel, the exhaustive scorer and the
+    flat view — goes through here; codec.delta_decode/decode_positions
+    are the per-block reference it is tested against."""
+    nd = tbl["n_docs"].to_numpy().astype(np.int64)
+    n = int(nd.sum())
+    row_of = np.repeat(np.arange(nd.size, dtype=np.int64), nd)
+    start = np.zeros(nd.size, dtype=np.int64)
+    np.cumsum(nd[:-1], out=start[1:])
+    first = start[row_of]  # each posting's block-start posting
+
+    gaps = codec.varint_decode(_bin_values(tbl["doc_ids_enc"]))
+    t = gaps.astype(np.int64)
+    t[first] = 0
+    c = np.cumsum(t)
+    ids = c - c[first] + codec.zigzag_decode(gaps[first])
+    tfs = codec.varint_decode(_bin_values(tbl["tfs_enc"])).astype(np.int64)
+    dls = codec.varint_decode(_bin_values(tbl["dls_enc"])).astype(np.int64)
+
+    flat_pos = plens = None
+    if "positions_enc" in tbl.column_names:
+        pcol = tbl["positions_enc"]
+        if pcol.null_count == 0:
+            flat = codec.varint_decode(_bin_values(pcol)).astype(np.int64)
+            slots, plens = codec.position_slots(flat, n)
+            vmask = np.ones(flat.size, dtype=bool)
+            vmask[slots] = False
+            d = flat[vmask]  # per-posting [p0_abs, gap...] segments
+            seg = np.zeros(n, dtype=np.int64)
+            np.cumsum(plens[:-1], out=seg[1:])
+            off = np.cumsum(d)
+            nz = plens > 0
+            base = np.zeros(n, dtype=np.int64)
+            base[nz] = off[seg[nz]] - d[seg[nz]]
+            flat_pos = off - np.repeat(base, plens)
+        elif pcol.null_count != len(pcol):
+            raise ValueError("mixed positional/non-positional blocks in one decode")
+
+    # mask dead docs per source snapshot (Lucene live-docs)
+    keep = np.ones(n, dtype=bool)
+    if tomb and n:
+        snaps = tbl["snapshot"].combine_chunks().dictionary_encode()
+        snap_of = snaps.indices.to_numpy()[row_of]
+        for code, sname in enumerate(snaps.dictionary.to_pylist()):
+            dead = tomb.get(sname)
+            if dead is not None and len(dead):
+                sel = snap_of == code
+                keep[sel] = ~np.isin(ids[sel], dead)
+    if not keep.all():
+        ids, tfs, dls, row_of = ids[keep], tfs[keep], dls[keep], row_of[keep]
+        if flat_pos is not None:
+            flat_pos = flat_pos[np.repeat(keep, plens)]
+            plens = plens[keep]
+    return ids, tfs, dls, row_of, flat_pos, plens
 
 
 def _block_encoder_arrow(block_size: int, avgdl_map: dict[str, float]):
@@ -363,21 +450,17 @@ def _merge_blocks_arrow(block_size: int, avgdl_map: dict[str, float], tomb_bc):
     (POSTING_SCHEMA + snapshot), partitioned by (shard, field), ->
     clean re-encoded block rows for the live corpus.
 
-    Each column of a whole (shard, field) group decodes in
-    ONE vectorized varint pass over the concatenated block buffers
-    (doc ids via a segmented cumsum with per-block zigzag absolutes),
-    dead docs mask per source snapshot in numpy, and the re-encode is
-    the SAME _encode_core the build encoder uses — so a compacted
-    block's bytes provably match a from-scratch build of the live
-    corpus (pinned by the sync suite's compact≡rebuild checks). The
-    only per-posting Python work left is the position count-slot walk
-    (codec.position_slots), which touches one int per POSTING, not per
-    position. Rows leave sorted by (field, term, block_id) per shard,
-    so compaction needs no second exchange, matching the build writer.
-    Memory per task follows _block_encoder_arrow's contract: every
-    (shard, field) group hashed to the partition, combined at once —
-    here as encoded base+delta blocks plus one group's decoded arrays
-    at a time."""
+    Each (shard, field) group decodes through the one block decoder
+    (_decode_blocks: one vectorized varint pass per column, dead docs
+    masked per source snapshot) and re-encodes through the SAME
+    _encode_core the build encoder uses — so a compacted block's bytes
+    provably match a from-scratch build of the live corpus (pinned by
+    the sync suite's compact≡rebuild checks). Rows leave sorted by
+    (field, term, block_id) per shard, so compaction needs no second
+    exchange, matching the build writer. Memory per task follows
+    _block_encoder_arrow's contract: every (shard, field) group hashed
+    to the partition, combined at once — here as encoded base+delta
+    blocks plus one group's decoded arrays at a time."""
     import pyarrow as pa
 
     def merge(batches):
@@ -389,91 +472,18 @@ def _merge_blocks_arrow(block_size: int, avgdl_map: dict[str, float], tomb_bc):
         shard_r = tbl["shard"].to_numpy()
         field_r = tbl["field"].to_pandas().to_numpy()
         keys = sorted({(int(s), str(f)) for s, f in zip(shard_r, field_r)})
-        nd_c = tbl["n_docs"].to_numpy().astype(np.int64)
-        snap_c = tbl["snapshot"].to_pandas().to_numpy()
-
-        def concat_bin(col) -> bytes:
-            arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
-            return b"".join(m if m is not None else b"" for m in arr.to_pylist())
-
         for shard, field in keys:
-            ridx = np.flatnonzero((shard_r == shard) & (field_r == field))
-            take = pa.array(ridx)
-            g_nd = nd_c[ridx]
-            n = int(g_nd.sum())
-            if n == 0:
+            g = tbl.take(pa.array(np.flatnonzero((shard_r == shard) & (field_r == field))))
+            ids, tfs, dls, row_of, flat_pos, plens = _decode_blocks(g, tomb)
+            if ids.size == 0:
                 continue
-            bs_idx = np.zeros(g_nd.size, dtype=np.int64)
-            np.cumsum(g_nd[:-1], out=bs_idx[1:])
-
-            # ---- doc ids: one varint pass + segmented cumsum with the
-            # per-block zigzag absolute at each block start
-            gaps = codec.varint_decode(concat_bin(tbl["doc_ids_enc"].take(take)))
-            abs0 = codec.zigzag_decode(gaps[bs_idx])
-            t = gaps.astype(np.int64)
-            t[bs_idx] = 0
-            c = np.cumsum(t)
-            ids = c - np.repeat(c[bs_idx], g_nd) + np.repeat(abs0, g_nd)
-            tfs = codec.varint_decode(
-                concat_bin(tbl["tfs_enc"].take(take))
-            ).astype(np.int64)
-            dls = codec.varint_decode(
-                concat_bin(tbl["dls_enc"].take(take))
-            ).astype(np.int64)
-
-            # ---- per-posting term codes: dictionary-encode the block
-            # terms, repeat per block's doc count
-            g_terms = tbl["term"].take(take).combine_chunks()
-            denc = g_terms.dictionary_encode()
-            codes = np.repeat(denc.indices.to_numpy().astype(np.int64), g_nd)
-            uniq = denc.dictionary
-
-            # ---- positions: decode the concatenated [count, p0, gap..]
-            # streams once; the count-slot walk yields per-posting value
-            # segments, gaps -> absolutes via one segmented cumsum
-            g_pos = tbl["positions_enc"].take(take).combine_chunks()
-            if g_pos.null_count == 0:
-                flat = codec.varint_decode(concat_bin(g_pos)).astype(np.int64)
-                slots, plens = codec.position_slots(flat, n)
-                vmask = np.ones(flat.size, dtype=bool)
-                vmask[slots] = False
-                d = flat[vmask]  # per-posting [p0_abs, gap...] segments
-                seg = np.zeros(n, dtype=np.int64)
-                np.cumsum(plens[:-1], out=seg[1:])
-                off = np.cumsum(d)
-                nz = plens > 0
-                base_vals = np.zeros(n, dtype=np.int64)
-                base_vals[nz] = off[seg[nz]] - d[seg[nz]]
-                flat_abs = off - np.repeat(base_vals, plens)
-            elif g_pos.null_count == len(g_pos):
-                flat_abs = None
-                plens = None
-            else:
-                raise ValueError(
-                    f"mixed positional/non-positional blocks in field {field!r}"
-                )
-
-            # ---- mask dead docs per source snapshot (Lucene live-docs)
-            g_snap = snap_c[ridx]
-            keep = np.ones(n, dtype=bool)
-            for sname in set(g_snap):
-                dead = tomb.get(sname)
-                if dead is None or not np.asarray(dead).size:
-                    continue
-                sel = np.repeat(g_snap == sname, g_nd)
-                keep[sel] = ~np.isin(ids[sel], np.asarray(dead, dtype=np.int64))
-            if not keep.all():
-                if flat_abs is not None:
-                    flat_abs = flat_abs[np.repeat(keep, plens)]
-                    plens = plens[keep]
-                ids, tfs, dls, codes = ids[keep], tfs[keep], dls[keep], codes[keep]
-                if ids.size == 0:
-                    continue
-
+            # per-posting term codes: dictionary-encode the block terms
+            denc = g["term"].combine_chunks().dictionary_encode()
+            codes = denc.indices.to_numpy().astype(np.int64)[row_of]
             batch = _encode_core(
-                shard, field, ids, tfs, dls, codes, uniq,
+                shard, field, ids, tfs, dls, codes, denc.dictionary,
                 float(avgdl_map.get(field, 1.0)), block_size,
-                flat_abs, plens,
+                flat_pos, plens,
             )
             if batch is not None:
                 yield batch
@@ -822,10 +832,13 @@ class CompressedIndex:
         """An InvertedIndex-shaped adapter over the PERSISTED store for
         one query's terms: ``postings`` is the decoded flat frame
         (field, term, doc_id, tf, dl, positions) produced by a
-        mapInPandas decode of ONLY those terms' blocks (the term
-        IN-list pushes to the block scan; parquet prunes row groups on
-        the term-sorted layout), tombstone-masked per source snapshot
-        exactly as the WAND kernel masks them.
+        mapInArrow over ONLY those terms' blocks (the term IN-list
+        pushes to the block scan; parquet prunes row groups on the
+        term-sorted layout). Each batch goes through the one block
+        decoder (_decode_blocks), tombstone-masked per source snapshot
+        exactly as the WAND kernel masks them; positions leave as a
+        list column over the decoder's flat values (null for a
+        non-positional field).
 
         This is the bridge that lets every flat-index operator —
         search.phrase (incl. Lucene-exact sloppy and repeat groups),
@@ -836,6 +849,9 @@ class CompressedIndex:
         terms' postings), never corpus-shaped; term_stats/corpus
         scalars come from the store's live views (exact under churn).
         """
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
         man = self.manifest
         uniq = sorted(set(terms))
         fpred = (
@@ -843,48 +859,33 @@ class CompressedIndex:
         )
         blocks = self.postings.filter(fpred & F.col("term").isin(uniq))
         tomb_bc = self.tombstones_bc()
-        from lighthouse_spark.functions import codec as _codec
+
+        def decode(tbl):
+            ids, tfs, dls, row_of, flat_pos, plens = _decode_blocks(tbl, tomb_bc.value)
+            if flat_pos is None:
+                positions = pa.nulls(ids.size, pa.list_(pa.int32()))
+            else:
+                off = _binary_offsets(plens, np.arange(plens.size + 1))
+                positions = pa.ListArray.from_arrays(off, flat_pos.astype(np.int32))
+            rows = pa.array(row_of)
+            return pa.RecordBatch.from_arrays(
+                [
+                    tbl["field"].take(rows).combine_chunks(),
+                    tbl["term"].take(rows).combine_chunks(),
+                    pa.array(ids), pa.array(tfs), pa.array(dls), positions,
+                ],
+                ["field", "term", "doc_id", "tf", "dl", "positions"],
+            )
 
         def dec(batches):
-            tomb = tomb_bc.value
-            for pdf in batches:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    ids = _codec.delta_decode(bytes(row.doc_ids_enc))
-                    tfs = _codec.varint_decode(bytes(row.tfs_enc)).astype(np.int64)
-                    dls = _codec.varint_decode(bytes(row.dls_enc)).astype(np.int64)
-                    if row.positions_enc is not None:
-                        poss = _codec.decode_positions(
-                            bytes(row.positions_enc), ids.size
-                        )
-                    else:
-                        poss = [None] * ids.size
-                    t = tomb.get(row.snapshot)
-                    if t is not None and t.size:
-                        live = ~np.isin(ids, t)
-                        if not live.any():
-                            continue
-                        ids, tfs, dls = ids[live], tfs[live], dls[live]
-                        poss = [p for p, lv in zip(poss, live) if lv]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "field": row.field,
-                                "term": row.term,
-                                "doc_id": ids,
-                                "tf": tfs,
-                                "dl": dls,
-                                "positions": [
-                                    None if p is None else p.astype(np.int32)
-                                    for p in poss
-                                ],
-                            }
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+            for b in batches:
+                # a batch may mix positional and non-positional fields
+                has_pos = b.column("positions_enc").is_valid()
+                for part in (b.filter(has_pos), b.filter(pc.invert(has_pos))):
+                    if part.num_rows:
+                        yield decode(pa.Table.from_batches([part]))
 
-        decoded = blocks.mapInPandas(
+        decoded = blocks.mapInArrow(
             dec,
             "field string, term string, doc_id long, tf long, dl long,"
             " positions array<int>",

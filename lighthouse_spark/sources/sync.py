@@ -100,10 +100,25 @@ def plan_batch(source: DataFrame, state: SyncState, id_col: str, modified_col: s
     )
 
 
-def route_batch(batch: DataFrame, bid_state_col: str = "bid_state") -> tuple[DataFrame, DataFrame]:
-    """(upserts, deletes) per chainquery.go:127-131."""
-    is_dead = F.col(bid_state_col).isin("Spent", "Expired")
-    return batch.filter(~is_dead), batch.filter(is_dead)
+_DEAD_STATES = ("Expired", "Spent")
+
+
+def _route(batch: DataFrame, meta: list, bid_state_col: str | None):
+    """(up_ids, del_ids, upserts) of one batch from its collected
+    ``_id``/``_bs`` metadata rows (chainquery.go:127-131): only
+    Spent/Expired rows delete; every other row upserts, a NULL
+    bid_state included. ``bid_state_col`` None routes everything to
+    upserts. ``upserts`` is None when nothing upserts."""
+    dead = [bool(bid_state_col) and r["_bs"] in _DEAD_STATES for r in meta]
+    up_ids = [int(r["_id"]) for r, d in zip(meta, dead) if not d]
+    del_ids = [int(r["_id"]) for r, d in zip(meta, dead) if d]
+    upserts = None
+    if up_ids:
+        upserts = batch
+        if bid_state_col:
+            bs = F.col(bid_state_col)
+            upserts = batch.filter(bs.isNull() | ~bs.isin(*_DEAD_STATES))
+    return up_ids, del_ids, upserts
 
 
 def _union(frames: list[DataFrame]) -> DataFrame:
@@ -750,13 +765,7 @@ def sync(
                 F.col(bid_state_col).alias("_bs"),
             ).collect()
             if meta:
-                dead = {"Spent", "Expired"}
-                up_ids = [int(r["_id"]) for r in meta if r["_bs"] not in dead]
-                del_ids = [int(r["_id"]) for r in meta if r["_bs"] in dead]
-                upserts = (
-                    batch.filter(~F.col(bid_state_col).isin(*sorted(dead)))
-                    if up_ids else None
-                )
+                up_ids, del_ids, upserts = _route(batch, meta, bid_state_col)
                 cindex = apply_incremental(
                     cindex, upserts=upserts, up_id_list=up_ids, del_id_list=del_ids
                 )

@@ -61,16 +61,9 @@ def run_available_now(
         meta = batch.select(*sel).collect()
         if not meta:
             return
-        dead = {"Spent", "Expired"}
-        up_ids = [int(r["_id"]) for r in meta if not routed or r["_bs"] not in dead]
-        del_ids = [int(r["_id"]) for r in meta if routed and r["_bs"] in dead]
-        upserts = None
-        if up_ids:
-            upserts = (
-                batch.filter(~F.col(bid_state_col).isin(*sorted(dead)))
-                if routed
-                else batch
-            )
+        up_ids, del_ids, upserts = sync_mod._route(
+            batch, meta, bid_state_col if routed else None
+        )
         state["ci"] = sync_mod.apply_incremental(
             state["ci"], upserts=upserts, up_id_list=up_ids, del_id_list=del_ids
         )

@@ -19,6 +19,7 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -97,6 +98,7 @@ def main() -> None:
     t0 = time.time()
     tot_cand = 0
     for shard, g in pdf.groupby("shard"):
+        g = pa.Table.from_pandas(g, preserve_index=False)
         res = wand._kernel(g, idf, qtf, avgdl, 10, tomb)
         tot_cand += len(res)
     out["kernel_replay_sec"] = round(time.time() - t0, 3)

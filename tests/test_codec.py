@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -214,3 +215,81 @@ def test_position_slots_walk_and_mismatch():
         codec.position_slots(flat, 2)  # trailing values left over
     with pytest.raises(ValueError, match="length mismatch"):
         codec.position_slots(flat, 4)  # counts run past the end
+
+
+def _random_block_table(rng, positional):
+    """Block rows over three snapshots: ids mix negative and large
+    values (zigzag absolutes), blocks of 1-20 postings, and positional
+    postings with 0-6 positions each."""
+    import pyarrow as pa
+
+    cols = {k: [] for k in ("n_docs", "doc_ids_enc", "tfs_enc", "dls_enc",
+                            "positions_enc", "snapshot")}
+    blocks = []
+    for _ in range(int(rng.integers(5, 15))):
+        n = int(rng.integers(1, 21))
+        ids = np.sort(rng.choice(np.arange(-(2**40), 2**40, 2**30), n, replace=False))
+        tfs = rng.integers(1, 9, n)
+        dls = rng.integers(1, 300, n)
+        poss = [np.sort(rng.choice(500, int(rng.integers(0, 7)), replace=False))
+                for _ in range(n)]
+        snap = str(rng.choice(["base", "d1", "d2"]))
+        blocks.append((ids, tfs, dls, poss, snap))
+        cols["n_docs"].append(n)
+        cols["doc_ids_enc"].append(codec.delta_encode(ids))
+        cols["tfs_enc"].append(codec.varint_encode(tfs.astype(np.uint64)))
+        cols["dls_enc"].append(codec.varint_encode(dls.astype(np.uint64)))
+        cols["positions_enc"].append(codec.encode_positions(poss) if positional else None)
+        cols["snapshot"].append(snap)
+    types = {"n_docs": pa.int32(), "positions_enc": pa.binary(), "snapshot": pa.string()}
+    tbl = pa.table({k: pa.array(v, types.get(k, pa.binary())) for k, v in cols.items()})
+    return tbl, blocks
+
+
+@pytest.mark.parametrize("seed", range(6))
+@pytest.mark.parametrize("positional", [True, False])
+def test_decode_blocks_matches_per_block_reference(seed, positional):
+    """store._decode_blocks, the one block decoder, equals a per-block
+    loop over codec.delta_decode / varint_decode / decode_positions
+    with per-snapshot np.isin masking — including a tombstone set that
+    empties a whole block and postings with no positions."""
+    from lighthouse_spark.sources.store import _decode_blocks
+
+    rng = np.random.default_rng(seed)
+    tbl, blocks = _random_block_table(rng, positional)
+    # one whole block dead in its snapshot, plus random deaths elsewhere
+    tomb = {s: set() for s in ("base", "d1", "d2")}
+    tomb[blocks[0][4]].update(blocks[0][0].tolist())
+    for ids, *_, snap in blocks[1:]:
+        tomb[snap].update(rng.choice(ids, int(rng.integers(0, ids.size)), replace=False).tolist())
+    tomb = {s: np.array(sorted(v), dtype=np.int64) for s, v in tomb.items()}
+
+    want = {k: [] for k in ("ids", "tfs", "dls", "row_of", "flat", "plens")}
+    for r in range(tbl.num_rows):
+        ids = codec.delta_decode(tbl["doc_ids_enc"][r].as_py())
+        tfs = codec.varint_decode(tbl["tfs_enc"][r].as_py()).astype(np.int64)
+        dls = codec.varint_decode(tbl["dls_enc"][r].as_py()).astype(np.int64)
+        live = ~np.isin(ids, tomb[tbl["snapshot"][r].as_py()])
+        want["ids"] += ids[live].tolist()
+        want["tfs"] += tfs[live].tolist()
+        want["dls"] += dls[live].tolist()
+        want["row_of"] += [r] * int(live.sum())
+        if positional:
+            poss = codec.decode_positions(tbl["positions_enc"][r].as_py(), ids.size)
+            for p, lv in zip(poss, live):
+                if lv:
+                    want["flat"] += p.tolist()
+                    want["plens"].append(p.size)
+    assert want["row_of"] and 0 not in want["row_of"]  # block 0 is all dead
+
+    ids, tfs, dls, row_of, flat, plens = _decode_blocks(tbl, tomb)
+    assert ids.tolist() == want["ids"]
+    assert tfs.tolist() == want["tfs"]
+    assert dls.tolist() == want["dls"]
+    assert row_of.tolist() == want["row_of"]
+    if positional:
+        assert flat.tolist() == want["flat"]
+        assert plens.tolist() == want["plens"]
+        assert 0 in want["plens"]
+    else:
+        assert flat is None and plens is None

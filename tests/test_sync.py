@@ -308,6 +308,30 @@ def test_checkpointed_sync_cursor(spark, base, tmp_path):
     assert len(synced) == 4
 
 
+def test_null_bid_state_upserts(spark, tmp_path):
+    """A batch row with a NULL bid_state is an upsert (only Spent/Expired
+    delete), through both `sync.sync` and the streaming path: its old
+    version is replaced by the new text, not dropped."""
+    from lighthouse_spark.streaming.incremental import run_available_now
+
+    docs = synthetic_corpus(spark, 8)
+    ci = build_and_save(docs, "doc_id", FIELDS, str(tmp_path / "idx"), mode="code", n_shards=2)
+    assert ci.corpus_stats()["content"][0] == 8
+    pdf = ci.docs.orderBy("doc_id").limit(2).toPandas()
+    pdf["content"] = ["nullstate fresh", "acceptedstate fresh"]
+    pdf = pdf.assign(id=[1, 2], modified_at=100, bid_state=[None, "Accepted"])
+    null_id = int(pdf["doc_id"][0])
+
+    out = sync.sync(ci, spark.createDataFrame(pdf), str(tmp_path / "state.json"))
+    src = tmp_path / "incoming"
+    spark.createDataFrame(pdf).write.parquet(str(src))
+    schema = spark.read.parquet(str(src)).schema
+    streamed = run_available_now(ci, str(src), str(tmp_path / "ckpt"), schema=schema)
+    for got in (out, streamed):
+        assert got.corpus_stats()["content"][0] == 8
+        assert [d for d, _ in _topk(got, "nullstate")] == [null_id]
+
+
 def test_delete_blocked_with_channel_expansion(spark, tmp_path):
     from lighthouse_spark.sources.claims import synthetic_claims
 

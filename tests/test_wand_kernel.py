@@ -13,7 +13,7 @@ queries, and per-snapshot tombstones.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 
 from lighthouse_spark.functions import codec
@@ -91,9 +91,8 @@ def test_kernel_matches_bruteforce_randomized(seed):
     )
     tomb = {"s0": np.array(sorted(dead), dtype=np.int64)}
 
-    pdf = pd.DataFrame(rows)
-    out = _kernel(pdf, idf, qtf, avgdl, k, tomb)
-    got = list(zip(out["doc_id"].tolist(), out["score"].tolist()))
+    out = _kernel(pa.Table.from_pylist(rows), idf, qtf, avgdl, k, tomb)
+    got = list(zip(out["doc_id"].to_pylist(), out["score"].to_pylist()))
     want = _brute(postings, idf, qtf, avgdl, k, dead)
     assert [g[0] for g in got] == [w[0] for w in want], f"seed={seed}"
     for (gd, gs), (wd, ws) in zip(got, want):
@@ -116,9 +115,9 @@ def test_kernel_dense_identical_lists_all_ties():
         rows.extend(_blocks_for_term(t, ids, tfs, dls, avgdl))
     idf = {t: 1.3 for t in postings}
     qtf = {t: 1.0 for t in postings}
-    out = _kernel(pd.DataFrame(rows), idf, qtf, avgdl, k, {})
+    out = _kernel(pa.Table.from_pylist(rows), idf, qtf, avgdl, k, {})
     want = _brute(postings, idf, qtf, avgdl, k, set())
-    assert out["doc_id"].tolist() == [w[0] for w in want] == list(range(k))
+    assert out["doc_id"].to_pylist() == [w[0] for w in want] == list(range(k))
 
 
 def test_kernel_empty_after_tombstones():
@@ -127,6 +126,6 @@ def test_kernel_empty_after_tombstones():
         "t0", ids, np.ones(5, dtype=np.int64), np.full(5, 10, dtype=np.int64), 10.0
     )
     tomb = {"s0": ids}
-    out = _kernel(pd.DataFrame(rows), {"t0": 1.0}, {"t0": 1.0}, 10.0, 5, tomb)
+    out = _kernel(pa.Table.from_pylist(rows), {"t0": 1.0}, {"t0": 1.0}, 10.0, 5, tomb)
     assert len(out) == 0
-    assert list(out.columns) == ["doc_id", "score"]
+    assert out.column_names == ["doc_id", "score"]
