@@ -38,6 +38,7 @@ from lighthouse_spark.functions import memo
 from lighthouse_spark.functions.analysis import tokenize_text
 from lighthouse_spark.operators import expand, scoring, search
 from lighthouse_spark.plans.indexer import InvertedIndex
+from lighthouse_spark.session import local_frame
 
 SLOP = 5            # auto_complete.go:63
 MAX_EXPANSIONS = 50  # auto_complete.go:64
@@ -148,7 +149,7 @@ def phrase_prefix(
         w_rows.append((e, scoring.idf_py(dfm[e], n) * boost, True))
     if not w_rows:
         return None
-    spec = index.spark.createDataFrame(w_rows, "term string, w double, is_exp boolean")
+    spec = local_frame(index.spark, w_rows, "term string, w double, is_exp boolean")
     p = index.postings.filter(
         (F.col("field") == field) & F.col("term").isin(sorted({r[0] for r in w_rows}))
     ).select("term", "doc_id", "tf", "dl")
@@ -304,10 +305,12 @@ def autocomplete_over_store(
     the last token — fetched with ONE dictionary round trip against
     the store's live term_stats (the same bounded
     expand_prefix_with_df_fields plan the flat path uses). Those
-    terms' blocks decode via flat_view_terms and the UNCHANGED
-    autocomplete() runs over the view; parity with the flat index is
-    pinned by tests. Cost is O(heads + 50·fields postings), never
-    corpus-shaped."""
+    terms' blocks decode ONCE via flat_view_terms (one job, the
+    request's only Python work) and the UNCHANGED autocomplete() runs
+    over the view, each per-field scan reading the decoded rows;
+    parity with the flat index is pinned by tests. Cost is
+    O(heads + 50·fields postings), never corpus-shaped. The memoized
+    plan pins the decoded postings (functions/memo)."""
     fmap = fields or ClaimsFieldMap()
     req.validate()
     return memo.get(

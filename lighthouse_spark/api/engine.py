@@ -53,6 +53,7 @@ from lighthouse_spark.functions.analysis import tokenize_text
 from lighthouse_spark.operators import expand, fused, scoring, search
 from lighthouse_spark.operators import trigram as trigram_ops
 from lighthouse_spark.plans.indexer import InvertedIndex
+from lighthouse_spark.session import local_frame
 
 
 @dataclass
@@ -324,9 +325,7 @@ class SearchEngine:
                 )
             )
         if not parts:
-            return self.index.spark.createDataFrame(
-                [], "doc_id long, clause string, score double"
-            )
+            return local_frame(self.index.spark, [], "doc_id long, clause string, score double")
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -674,20 +673,23 @@ def search_over_store(
     every fuzzy expansion (one dictionary round trip via
     expand.fuzzy_and_df — the same scan the engine's own prefetch
     performs, against the store's live term_stats/term_dict views).
-    Those terms' blocks decode into a flat view
-    (CompressedIndex.flat_view_terms) and the UNCHANGED SearchEngine
-    runs over it; a term missing from the universe would silently
-    score 0, so parity with the flat-index engine is pinned by tests
-    across phrase / fuzzy / @-channel / filter queries.
+    Those terms' blocks decode ONCE into a materialized flat view
+    (CompressedIndex.flat_view_terms: one job, the request's only
+    Python work) and the UNCHANGED SearchEngine runs over it, every
+    match, phrase and exact-phrase-filter scan reading the decoded
+    rows; a term missing from the universe would silently score 0, so
+    parity with the flat-index engine is pinned by tests across
+    phrase / fuzzy / @-channel / filter queries.
 
     Scale shape: decode cost is O(query terms' postings) — the Lucene
     analogue of reading only the query's term/.pos entries — and the
     docs side stays the store's bucketed table (filters and the
     response projection push into its scan).
 
-    The assembled lazy plan is memoized per request, but only without
+    The assembled plan is memoized per request, but only without
     ``engine_kwargs`` (they may carry unhashable trigram handles, as
-    SearchEngine.search skips the memo under enable_contains)."""
+    SearchEngine.search skips the memo under enable_contains). The
+    entry pins the request's decoded postings (functions/memo)."""
     fmap = fields or ClaimsFieldMap()
     req.validate()
 

@@ -24,9 +24,18 @@ Key parts must be hashable and must not be ``id()``s (CPython reuses
 an id once its object is collected); a DataFrame hashes by identity
 and the entry holds it, so a frame may itself be a key part.
 
-Caching a *plan* (a lazy DataFrame) never caches results: every
-collect re-executes the job from the parquet/cached inputs — the
-prepared-statement analogue of Lucene's reused Weight/Scorer trees.
+Caching a *plan* (a lazy DataFrame) re-executes it on every collect —
+the prepared-statement analogue of Lucene's reused Weight/Scorer
+trees — with one exception. A store-served request plan
+(search_over_store / autocomplete_over_store) reads its decoded
+postings from a local checkpoint (CompressedIndex._flat_view_impl), so
+its entry pins ONE request's decoded postings: the query terms' rows,
+MEMORY_AND_DISK on the executors. At most ``_CAP`` = 128 entries per
+handle, so at most 128 requests' decodes per live snapshot handle. The
+blocks go when the entry is evicted or the handle is collected (the
+JVM's context cleaner drops a checkpoint no frame references). A lost
+executor loses its checkpoint blocks, and the lineage was truncated:
+a plan that reads them then fails, and is not recomputed.
 
 Thread-safety: a lock guards each map; builds run outside the lock
 (they may launch Spark jobs and nest further lookups), so two racing

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from lighthouse_spark.operators.scoring import B, K1, idf_py
 from lighthouse_spark.plans.indexer import InvertedIndex
+from lighthouse_spark.session import local_frame
 
 
 @dataclass(frozen=True)
@@ -107,7 +108,7 @@ def phrase_match_ids(
         if n and ps.terms and all(dfm.get(t) for t in ps.terms):
             valid.append(ps)
     if not valid:
-        return spark.createDataFrame([], "doc_id long")
+        return local_frame(spark, [], "doc_id long")
     pairs: dict[str, set[str]] = {}
     for ps in valid:
         pairs.setdefault(ps.field, set()).update(ps.terms)
@@ -159,8 +160,9 @@ def _clause_rows(
                  idf_py(df, n) * c * ms.boost, float(avgdl))
             )
     if rows:
-        spec = spark.createDataFrame(
-            rows, "clause string, gate string, field string, term string, w double, avgdl double"
+        spec = local_frame(
+            spark, rows,
+            "clause string, gate string, field string, term string, w double, avgdl double",
         )
         pairs: dict[str, set[str]] = {}
         for _, _, f, t, _, _ in rows:
@@ -232,7 +234,7 @@ def execute(
     spark = index.spark
     parts = _clause_rows(index, match_specs, phrase_specs, dfmaps, per_clause_agg=True)
     if not parts:
-        return spark.createDataFrame([], "doc_id long, clause string, score double")
+        return local_frame(spark, [], "doc_id long, clause string, score double")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -404,7 +406,7 @@ def execute_collapsed(
 
     if not parts:
         schema = "doc_id long, " + " double, ".join(s_cols) + " double"
-        return spark.createDataFrame([], schema), gate_vals
+        return local_frame(spark, [], schema), gate_vals
     rows = parts[0]
     for p in parts[1:]:
         rows = rows.unionByName(p)

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from lighthouse_spark.functions import memo
 from lighthouse_spark.operators import scoring
 from lighthouse_spark.plans.indexer import InvertedIndex
+from lighthouse_spark.session import local_frame
 
 MAX_EXPANSIONS = 50  # ref: auto_complete.go:59-64
 
@@ -44,8 +45,8 @@ def _qterms_df(index: InvertedIndex, terms: list[str]) -> DataFrame:
     duplicated query term once per occurrence — equivalent to a qtf
     multiplier under score-sum)."""
     counts = Counter(terms)
-    return index.spark.createDataFrame(
-        [(t, float(c)) for t, c in sorted(counts.items())], "term string, qtf double"
+    return local_frame(
+        index.spark, [(t, float(c)) for t, c in sorted(counts.items())], "term string, qtf double"
     )
 
 
@@ -128,8 +129,8 @@ def batch_match_topk(
     n, avgdl = index.corpus_stats().get(field, (0, 1.0))
     all_terms = sorted({t for ts in queries.values() for t in ts})
     if not all_terms or n == 0:
-        return index.spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int"
+        return local_frame(
+            index.spark, [], "query_id string, doc_id long, score double, rank int"
         )
     dfm = prefetch_df(index, [field], all_terms)[field]
     rows = []
@@ -138,10 +139,10 @@ def batch_match_topk(
             if dfm.get(t):
                 rows.append((qid, t, float(c) * scoring.idf_py(dfm[t], n)))
     if not rows:
-        return index.spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int"
+        return local_frame(
+            index.spark, [], "query_id string, doc_id long, score double, rank int"
         )
-    spec = index.spark.createDataFrame(rows, "query_id string, term string, w double")
+    spec = local_frame(index.spark, rows, "query_id string, term string, w double")
     live = sorted({t for _, t, _ in rows})
     p = _field_postings(index, field, live)
     scored = (
@@ -379,7 +380,7 @@ def phrase(
 
 
 def _empty_scored(index: InvertedIndex) -> DataFrame:
-    return index.spark.createDataFrame([], "doc_id long, score double")
+    return local_frame(index.spark, [], "doc_id long, score double")
 
 
 def bool_should(frames: list[DataFrame], minimum_should_match: int = 1) -> DataFrame:

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from lighthouse_spark.functions import memo
 from lighthouse_spark.operators.scoring import B, K1, idf_py
+from lighthouse_spark.session import local_frame
 from lighthouse_spark.sources.store import CompressedIndex, _decode_blocks
 
 OUT_SCHEMA = "doc_id long, score double"
@@ -216,12 +217,12 @@ def _per_shard_topk(cindex, field, terms, k, boost, shard_fn) -> DataFrame:
     spark = cindex.spark
     uniq = sorted(set(terms))
     if not uniq:
-        return spark.createDataFrame([], OUT_SCHEMA)
+        return local_frame(spark, [], OUT_SCHEMA)
     n, avgdl = cindex.corpus_stats().get(field, (0, 1.0))
     dfm = cindex.df_map(field, uniq)
     present = [t for t in uniq if t in dfm]
     if n == 0 or not present:
-        return spark.createDataFrame([], OUT_SCHEMA)
+        return local_frame(spark, [], OUT_SCHEMA)
     idf = {t: idf_py(dfm[t], n) * boost for t in present}
     counts = Counter(terms)
     qtf = {t: float(counts[t]) for t in present}

@@ -9,8 +9,9 @@ stats side tables).
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_driver_memory() -> str:
@@ -64,3 +65,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple], ddl: str) -> DataFrame:
+    """A driver-side side frame (query specs, literal id lists, empty
+    results) with exactly ``ddl``'s schema, planned as a LocalTableScan.
+
+    ``spark.createDataFrame(<list>, ddl)`` plans a Python-RDD scan: on
+    PySpark 4.1.2 every job that reads it starts Python worker tasks,
+    even for an empty list. An Arrow table with the DDL's schema plans
+    as a local relation and starts none. Each row is a tuple in the
+    DDL's column order; a row of any other length raises ValueError.
+    Values convert to the column's type (an int into a double column)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    rows = [tuple(r) for r in rows]
+    width = len(schema.fields)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(f"row {r!r} has {len(r)} values; {ddl!r} has {width} columns")
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema=schema)

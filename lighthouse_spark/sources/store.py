@@ -830,15 +830,15 @@ class CompressedIndex:
         self, terms: list[str], fields: list[str] | None
     ) -> InvertedIndex:
         """An InvertedIndex-shaped adapter over the PERSISTED store for
-        one query's terms: ``postings`` is the decoded flat frame
-        (field, term, doc_id, tf, dl, positions) produced by a
-        mapInArrow over ONLY those terms' blocks (the term IN-list
-        pushes to the block scan; parquet prunes row groups on the
-        term-sorted layout). Each batch goes through the one block
-        decoder (_decode_blocks), tombstone-masked per source snapshot
-        exactly as the WAND kernel masks them; positions leave as a
-        list column over the decoder's flat values (null for a
-        non-positional field).
+        one query's terms: ``postings`` is decode_frame(terms, fields)
+        materialized ONCE, by one job, with a lineage-truncating
+        ``localCheckpoint(eager=True)`` (MEMORY_AND_DISK blocks on the
+        executors). Every scan of the view — match, phrase, exact-phrase
+        filter, per-field autocomplete — then reads those rows; none
+        runs the Python decode again, so a store-served request starts
+        Python workers for this one job only. The blocks live as long as
+        the view's frames: a memoized request plan pins them, and the
+        JVM's context cleaner drops them once the plan is collected.
 
         This is the bridge that lets every flat-index operator —
         search.phrase (incl. Lucene-exact sloppy and repeat groups),
@@ -849,15 +849,45 @@ class CompressedIndex:
         terms' postings), never corpus-shaped; term_stats/corpus
         scalars come from the store's live views (exact under churn).
         """
+        man = self.manifest
+        fd = man["fields"]
+        specs = {
+            k: (
+                FieldSpec(v["column"], positions=bool(v.get("positions")))
+                if isinstance(v, dict)
+                else FieldSpec(v[0], positions=bool(v[1]))
+            )
+            for k, v in fd.items()
+        }
+        view = InvertedIndex(
+            docs=self.docs,
+            postings=self.decode_frame(terms, fields).localCheckpoint(eager=True),
+            term_stats=self.term_stats,
+            doc_stats=self.doc_stats,
+            fields=specs,
+            doc_id_col=man["doc_id_col"],
+            mode=man.get("analyzer_mode", man.get("mode", "simple")),
+        )
+        view._corpus = self.corpus_stats()
+        return view
+
+    def decode_frame(self, terms: list[str], fields: list[str] | None = None) -> DataFrame:
+        """The lazy decode of ``terms``' blocks in ``fields`` (default:
+        every indexed field) into flat rows (field, term, doc_id, tf,
+        dl, positions): one mapInArrow over ONLY those terms' blocks
+        (the term IN-list pushes to the block scan; parquet prunes row
+        groups on the term-sorted layout). Each batch goes through the
+        one block decoder (_decode_blocks), tombstone-masked per source
+        snapshot exactly as the WAND kernel masks them; positions leave
+        as a list column over the decoder's flat values (null for a
+        non-positional field)."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        man = self.manifest
-        uniq = sorted(set(terms))
         fpred = (
             F.col("field").isin(list(fields)) if fields is not None else F.lit(True)
         )
-        blocks = self.postings.filter(fpred & F.col("term").isin(uniq))
+        blocks = self.postings.filter(fpred & F.col("term").isin(sorted(set(terms))))
         tomb_bc = self.tombstones_bc()
 
         def decode(tbl):
@@ -885,31 +915,11 @@ class CompressedIndex:
                     if part.num_rows:
                         yield decode(pa.Table.from_batches([part]))
 
-        decoded = blocks.mapInArrow(
+        return blocks.mapInArrow(
             dec,
             "field string, term string, doc_id long, tf long, dl long,"
             " positions array<int>",
         )
-        fd = man["fields"]
-        fields = {
-            k: (
-                FieldSpec(v["column"], positions=bool(v.get("positions")))
-                if isinstance(v, dict)
-                else FieldSpec(v[0], positions=bool(v[1]))
-            )
-            for k, v in fd.items()
-        }
-        view = InvertedIndex(
-            docs=self.docs,
-            postings=decoded,
-            term_stats=self.term_stats,
-            doc_stats=self.doc_stats,
-            fields=fields,
-            doc_id_col=man["doc_id_col"],
-            mode=man.get("analyzer_mode", man.get("mode", "simple")),
-        )
-        view._corpus = self.corpus_stats()
-        return view
 
     def tombstones(self) -> dict[str, np.ndarray]:
         """snapshot -> doc ids dead IN THAT SOURCE (updated/deleted).

@@ -58,6 +58,7 @@ from pyspark.sql import functions as F
 from lighthouse_spark.plans.indexer import (
     FieldSpec, _field_aggregates, _index_over_aggregates, build_index,
 )
+from lighthouse_spark.session import local_frame
 from lighthouse_spark.sources import store as store_mod
 from lighthouse_spark.sources.store import CompressedIndex, POSTING_SCHEMA
 
@@ -900,7 +901,7 @@ def process_blocked_list(
             for op in outpoints:
                 tx, _, vout = str(op).partition(":")
                 rows.append((tx, int(vout or 0)))
-            ops = spark.createDataFrame(rows, "_tx string, _vout long")
+            ops = local_frame(spark, rows, "_tx string, _vout long")
             resolved = (
                 docs.join(
                     F.broadcast(ops),
@@ -912,7 +913,7 @@ def process_blocked_list(
             )
 
         def lits(vals):
-            return spark.createDataFrame([(v,) for v in sorted(set(vals))], "_cid string")
+            return local_frame(spark, [(v,) for v in sorted(set(vals))], "_cid string")
 
         direct = [f for f in (resolved, lits(extra_claims) if extra_claims else None) if f is not None]
         chans = [f for f in (resolved, lits(extra_channels) if extra_channels else None) if f is not None]

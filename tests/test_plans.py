@@ -61,16 +61,21 @@ def test_topk_plans_take_ordered(index, docs, cidx):
 
 
 def test_store_read_paths_plan_no_pandas_udf(cidx):
-    """The WAND kernel and the flat-view decode run as Arrow UDFs: no
-    pandas grouped-map or map node in their executed plans."""
+    """The WAND kernel and the store's one decode step run as Arrow
+    UDFs: no pandas grouped-map or map node in their executed plans.
+    The flat view reads the decode's materialized rows, so its postings
+    plan holds no Python node at all."""
     plans = [
         _plan(wand.wand_topk(cidx, "content", ["the", "sparklight"], k=10)),
-        _plan(cidx.flat_view_terms(["the", "sparklight"]).postings),
+        _plan(cidx.decode_frame(["the", "sparklight"])),
     ]
     for p in plans:
         assert "FlatMapGroupsInPandas" not in p and "MapInPandas" not in p, p
     assert "FlatMapGroupsInArrow" in plans[0]
     assert "MapInArrow" in plans[1]
+    view = _plan(cidx.flat_view_terms(["the", "sparklight"]).postings)
+    for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython", "InPandas"):
+        assert node not in view, view
 
 
 def test_pagination_never_uses_global_window(index, docs):

@@ -303,11 +303,12 @@ def test_flat_view_pushes_term_filter_to_block_scan(spark, cindex):
     """The decode is bounded by the query's terms BECAUSE the term
     IN-list reaches the parquet block scan (PushedFilters) — pin it so
     a refactor can't silently turn flat_view into a full-postings
-    decode."""
+    decode. The pin is on decode_frame, the one step flat_view
+    materializes (the view's own postings are a checkpoint scan)."""
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
     try:
-        view = cindex.flat_view("content", ["license", "return"])
-        phys = view.postings._jdf.queryExecution().executedPlan().toString()
+        decode = cindex.decode_frame(["license", "return"], ["content"])
+        phys = decode._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.unset("spark.sql.maxMetadataStringLength")
     assert "PushedFilters" in phys
